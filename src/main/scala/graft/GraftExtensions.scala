@@ -58,7 +58,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
     // SQL surface for the chain-maintenance verbs Spark's grammar has
     // no spelling for: DESCRIBE HISTORY / VACUUM [RETAIN n GENERATIONS]
-    // / OPTIMIZE over graft_cl_ tables — the Delta-style delegating
+    // / OPTIMIZE / CHECK TABLE / tags over graft_cl_ and graft_plt_
+    // tables — the Delta-style delegating
     // parser (see GraftSqlParser); every other statement delegates to
     // the stock parser verbatim.
     e.injectParser((s, delegate) => new graft.plans.GraftSqlParser(s, delegate))
@@ -83,15 +84,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectHintResolutionRule(s => new graft.plans.ComposedServingRule(s))
 
     // Change-data-feed read surface: SELECT * FROM
-    // graft_changes('<graft_cl_ table>', fromGen[, toGen]) substitutes
-    // MergeOps.changeFeed's plan — a TABLE function, so the feed stays a
-    // distributed scan of the _cdf sidecars (a command would collect to
-    // the driver). Args must be literals (it is a catalog-metadata
-    // lookup, not a per-row function).
+    // graft_changes('<graft_cl_|graft_plt_ table>', fromGen[, toGen])
+    // substitutes GenerationChain.changeFeed's plan — a TABLE function,
+    // so the feed stays a distributed scan of the _cdf sidecars (a
+    // command would collect to the driver). Args must be literals (it
+    // is a catalog-metadata lookup, not a per-row function).
     e.injectTableFunction((
       FunctionIdentifier("graft_changes"),
       info("graft_changes",
-        "graft_changes(table, fromGen[, toGen]) - change data feed of a graft_cl_ layout table across generations (fromGen, toGen]"),
+        "graft_changes(table, fromGen[, toGen]) - change data feed of a graft_cl_/graft_plt_ layout table across generations (fromGen, toGen]"),
       (exprs: Seq[Expression]) => {
         val s = org.apache.spark.sql.SparkSession.getActiveSession.getOrElse(
           throw new IllegalStateException(
@@ -108,13 +109,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case other => throw new IllegalArgumentException(
             s"graft_changes: $what must be an integer literal, got $other")
         }
-        val (corpusDir, table, partitioned) =
-          graft.plans.GraftSqlParser.resolveAny(s, name, "graft_changes")
-        val from = gen(exprs(1), "fromGen")
-        val to = exprs.lift(2).map(gen(_, "toGen")).getOrElse(-1)
-        (if (partitioned)
-           graft.sources.PartitionedLayout.changeFeed(s, corpusDir, table, from, to)
-         else graft.operators.MergeOps.changeFeed(s, corpusDir, table, from, to))
+        graft.sources.GenerationChain.changeFeed(s,
+          graft.plans.GraftSqlParser.resolveAny(s, name, "graft_changes"),
+          gen(exprs(1), "fromGen"), exprs.lift(2).map(gen(_, "toGen")).getOrElse(-1))
           .queryExecution.analyzed
       }))
 

@@ -652,7 +652,9 @@ object ScalingBench {
     }
     def topGen(): Int = MergeOps.generations(spark, sfDir, "documents").last._1
     arm("change_feed/feed_read") {
-      MergeOps.changeFeed(spark, sfDir, "documents", topGen() - 1, topGen())
+      graft.sources.GenerationChain.changeFeed(spark,
+        graft.sources.GenerationChain.Chain(sfDir, "documents", partitioned = false),
+        topGen() - 1, topGen())
         .agg(count(lit(1))).head()
     }
     arm("change_feed/diff_derive") {

@@ -4,11 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Single-writer lease on a layout table's generation chain (SURVEY
   * §2.I): every verb that stages a new generation or reclaims old ones
-  * ([[MergeOps.applyToLayout]], [[MergeOps.rebucket]],
-  * [[MergeOps.compactGenerations]], [[MergeOps.vacuum]], the metadata
-  * swings) runs inside [[withLease]], so two concurrent appliers — two
-  * [[graft.streaming.StreamingMerge]] queries, or a compactor racing an
-  * applier, possibly in DIFFERENT JVMs — serialize instead of both
+  * — the applies ([[MergeOps.applyToLayout]],
+  * [[graft.sources.PartitionedLayout.applyToLayout]]), compaction and
+  * [[MergeOps.rebucket]], and the chain verbs of
+  * [[graft.sources.GenerationChain]] (column mapping, tags, vacuum) —
+  * runs inside [[withLease]] under its chain's namespace key
+  * ([[graft.sources.GenerationChain.Chain.key]]), so two concurrent
+  * appliers — two [[graft.streaming.StreamingMerge]] queries, or a
+  * compactor racing an applier, possibly in DIFFERENT JVMs — serialize instead of both
   * staging the same `_vN` and corrupting the chain. Crash recovery was
   * already filesystem-forward (CrashRecoverySpec); this closes
   * CONTENTION, the other half of multi-writer safety.

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.sources.CorpusLayout
+import graft.sources.{CorpusLayout, GenerationChain}
+import graft.sources.GenerationChain.Chain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,8 +71,9 @@ object MergeOps {
     * are excluded because they changed nothing) — so downstream
     * consumers (index rebuilds, replicas, caches) read WHAT CHANGED
     * per generation at delta cost instead of diffing corpus pairs.
-    * [[changeFeed]] is the read verb; `graft_changes(table, from, to)`
-    * the SQL spelling. Off by default: the feed costs one extra
+    * [[GenerationChain.changeFeed]] is the read verb;
+    * `graft_changes(table, from, to)` the SQL spelling. Off by default:
+    * the feed costs one extra
     * changeset-sized write + one corpus keys-only semi-join per apply
     * (matched-ness decides insert vs update). Generations that change
     * no rows (metadata swings, compaction, rebucket) contribute empty
@@ -283,28 +285,6 @@ object MergeOps {
         java.nio.file.Files.copy(from, to)
     }
 
-  /** Path of the next generation: scan existing `<table>_vN` siblings
-    * (the base `materialize` build lives at `<table>`, generation 0).
-    */
-  private def nextGenerationPath(s: SparkSession, corpusDir: String,
-                                 table: String): String = {
-    val base = layoutRoot(s, corpusDir)
-    val root = java.nio.file.Paths.get(base)
-    val next = {
-      val kids = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        val prefix = s"${table}_v"
-        kids.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
-            n.drop(prefix.length).forall(_.isDigit))
-          .map(_.drop(prefix.length).toInt)
-          .foldLeft(0)(math.max) + 1
-      } finally kids.close()
-    }
-    s"$base/${table}_v$next"
-  }
-
   /** Apply a changeset to a corpus table served by the bucketed
     * [[CorpusLayout]], producing a NEW bucketed generation — the
     * end-to-end incremental corpus refresh:
@@ -333,8 +313,9 @@ object MergeOps {
     *  4. previous generation files are never deleted here (in-flight
     *     plans resolved their paths at construction — the
     *     VectorIndexStore versioning recipe); reclaim drained `_vN`
-    *     dirs with [[vacuum]] — hard-linked bytes survive any subset of
-    *     generation dirs being dropped — or [[CorpusLayout.drop]].
+    *     dirs with [[GenerationChain.vacuum]] — hard-linked bytes
+    *     survive any subset of generation dirs being dropped — or
+    *     [[CorpusLayout.drop]].
     *
     * `cow = false` (or a changeset touching every populated bucket, or a
     * current generation whose files don't carry bucket suffixes) falls
@@ -389,8 +370,9 @@ object MergeOps {
     // FIRST fenced step re-syncs this session's catalog to the chain
     // tip, so a concurrent writer in another JVM can never be merged
     // over (lost update) or raced to the same _vN.
-    GenerationLease.withLease(s, corpusDir, table) {
-    CorpusLayout.resyncServing(s, corpusDir, table)
+    val chain = Chain(corpusDir, table, partitioned = false)
+    GenerationLease.withLease(s, corpusDir, chain.key) {
+    GenerationChain.resync(s, chain)
     // sizing policy FIRST (see [[TargetBucketBytesKey]]): when the
     // served B has drifted ≥4× off the sized count, pay the one full
     // rewrite now so THIS apply (and every following one) is already
@@ -401,7 +383,7 @@ object MergeOps {
     // bucket count may all have moved
     val target = CorpusLayout.ifPresent(s, corpusDir, table).get
     val changes0 = mkChanges(target)
-    val vpath = nextGenerationPath(s, corpusDir, table)
+    val vpath = GenerationChain.nextGeneration(s, chain)
     val (curLoc, curBuckets) = tableLayout(s, t)
     // Bucket placement hashes the key's BINARY representation, and
     // murmur3 differs by width: an IntegerType changeset key against a
@@ -724,7 +706,7 @@ object MergeOps {
                                     nBuckets: Int, vpath: String,
                                     changes: DataFrame, keyCol: String,
                                     mapping: Map[String, Option[String]] = Map.empty): Unit = {
-    linkGenerationForward(curLoc, vpath, withDv = false)
+    GenerationChain.linkForward(curLoc, vpath, partitioned = false, withDv = false)
     // catalog-metadata schema + schema-pinned empty frames: s.table(t)
     // passes the composed-serving rule and would hand back the LOGICAL
     // view, but the sidecar lives in PHYSICAL space (it composes BEFORE
@@ -759,175 +741,12 @@ object MergeOps {
     // (repairServing's contract: _SUCCESS + _BUCKETS = attachable)
     java.nio.file.Files.write(java.nio.file.Paths.get(vpath, "_SUCCESS"),
       Array.emptyByteArray)
-    swingCatalog(s, t, vpath, keyCol, nBuckets, physSchema.toDDL)
-  }
-
-  /** Staging-create + rename swing for generations whose files already
-    * exist on disk (MOR and metadata swings — the bucketed WRITE swings
-    * go through saveAsTable instead). Same minimal-downtime shape.
-    * SORTED BY states what the linked files honor (z-clustered files
-    * sort by `_zv`, not the key).
-    */
-  private def swingCatalog(s: SparkSession, t: String, vpath: String,
-                           keyCol: String, nBuckets: Int, ddl: String): Unit = {
-    val sortCol = CorpusLayout.sortColFor(vpath).getOrElse(keyCol)
-    s.sql(s"DROP TABLE IF EXISTS ${t}_staging")
-    s.sql(s"CREATE TABLE ${t}_staging ($ddl) USING PARQUET " +
-      s"CLUSTERED BY ($keyCol) SORTED BY ($sortCol) INTO $nBuckets BUCKETS " +
-      s"LOCATION '$vpath'")
+    // staging-create over the linked files + rename: same minimal-
+    // downtime shape as the bucketed write swings
+    GenerationChain.stageOverFiles(s, t, keyCol, vpath, nBuckets, physSchema, None)
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
     CorpusLayout.refreshRelationCache(s, t)
-  }
-
-  /** Link every data file (the `_dv` sidecar too, when asked) of
-    * `curLoc` into `vpath` byte-for-byte, carrying the `_CLUSTER`
-    * marker — the shared copy step of the MOR and metadata swings.
-    */
-  private def linkGenerationForward(curLoc: String, vpath: String,
-                                    withDv: Boolean): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(vpath))
-    val kids = java.nio.file.Files.list(java.nio.file.Paths.get(curLoc))
-    try {
-      import scala.jdk.CollectionConverters._
-      kids.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .foreach(f => linkOrCopy(java.nio.file.Paths.get(curLoc, f),
-          java.nio.file.Paths.get(vpath, f)))
-    } finally kids.close()
-    val cl = java.nio.file.Paths.get(curLoc, CorpusLayout.ClusterMarker)
-    if (java.nio.file.Files.exists(cl))
-      java.nio.file.Files.copy(cl,
-        java.nio.file.Paths.get(vpath, CorpusLayout.ClusterMarker))
-    val dvSrc = java.nio.file.Paths.get(curLoc, CorpusLayout.DvDir)
-    if (withDv && java.nio.file.Files.isDirectory(dvSrc)) {
-      val walk = java.nio.file.Files.walk(dvSrc)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.foreach { p =>
-          val dst = java.nio.file.Paths.get(vpath,
-            CorpusLayout.DvDir + "/" + dvSrc.relativize(p).toString)
-          if (java.nio.file.Files.isDirectory(p))
-            java.nio.file.Files.createDirectories(dst)
-          else linkOrCopy(p, dst)
-        }
-      } finally walk.close()
-    }
-  }
-
-  // ── DROP / RENAME COLUMN: per-generation column mapping (SURVEY
-  // §2.I) — the other half of schema evolution (ADD COLUMN rides the
-  // apply with NULL-fill). Both are METADATA-ONLY: the new generation
-  // hard-links every byte of its parent (data files AND dv sidecar)
-  // and only the `_MAPPING` marker changes; the serving read projects
-  // physical→logical (rename = alias, drop = omission). Applies keep
-  // working across the boundary — changesets speak LOGICAL names and
-  // translate back at the swing — and the mapping folds away at the
-  // next full rewrite, when logical names become the physical truth.
-  // The layout KEY cannot be renamed or dropped (row identity, bucket
-  // placement); renaming columns a table-format index derives from
-  // (documents.text → SignatureStore) leaves the index keyed on the
-  // old semantics — retrain in the same maintenance window, as with
-  // rebucket.
-
-  private def logicalColumns(m: Map[String, Option[String]],
-                             phys: org.apache.spark.sql.types.StructType): Seq[String] =
-    phys.fieldNames.toSeq.flatMap(p => m.get(p) match {
-      case None => Some(p)
-      case Some(Some(l)) => Some(l)
-      case Some(None) => None
-    })
-
-  private def physicalFor(m: Map[String, Option[String]], logical: String): String =
-    m.collectFirst { case (p, Some(l)) if l == logical => p }.getOrElse(logical)
-
-  /** Rename a logical column — a metadata-only generation (no file
-    * rewritten). Fails loudly on the key, an unknown source, or a
-    * colliding target. Returns the new generation's path.
-    */
-  def renameColumn(s: SparkSession, corpusDir: String, table: String,
-                   from: String, to: String): String = {
-    require(to.nonEmpty && !to.startsWith("_"),
-      s"invalid target column name '$to'")
-    metadataSwing(s, corpusDir, table) { (m, phys, keyCol) =>
-      require(from != keyCol, s"cannot rename the layout key '$keyCol'")
-      val logical = logicalColumns(m, phys)
-      require(logical.contains(from),
-        s"no column '$from' — logical columns are ${logical.mkString(", ")}")
-      require(!logical.contains(to), s"column '$to' already exists")
-      val p = physicalFor(m, from)
-      if (p == to) m - p else m + (p -> Some(to))
-    }
-  }
-
-  /** Drop a logical column — metadata-only: linked files keep the bytes,
-    * the serving projection omits them, and new rows fill the physical
-    * slot with NULL. Returns the new generation's path.
-    */
-  def dropColumn(s: SparkSession, corpusDir: String, table: String,
-                 column: String): String =
-    metadataSwing(s, corpusDir, table) { (m, phys, keyCol) =>
-      require(column != keyCol, s"cannot drop the layout key '$keyCol'")
-      val logical = logicalColumns(m, phys)
-      require(logical.contains(column),
-        s"no column '$column' — logical columns are ${logical.mkString(", ")}")
-      m + (physicalFor(m, column) -> None)
-    }
-
-  /** ADD COLUMNS as a metadata-only generation: every existing byte
-    * hard-links; the only new bytes are ONE zero-row "schema anchor"
-    * parquet file (bucket-0 named, footer only) carrying the widened
-    * physical schema. Serving and time-travel reads infer schema from
-    * file-footer union, so the anchor IS the durable record of the ADD —
-    * Spark's partition-0 writer emits a footer-only file for an empty
-    * frame by design (the mechanism that preserves schema for empty
-    * datasets), and parquet NULL-fills a requested column a file lacks,
-    * so every untouched row reads the new columns as NULL (the
-    * Delta/Iceberg metadata-only ADD COLUMN). The anchor rides bucket 0
-    * until the next rewrite of that bucket folds it away; until then
-    * bucket 0 holds two files, which costs nothing at read beyond
-    * Spark's (correct) refusal to claim per-bucket sort order there.
-    * Fails loudly on a name colliding with any LOGICAL or PHYSICAL
-    * column (a dropped physical slot must not be shadowed — the mapping
-    * entry would hide the new column too).
-    */
-  def addColumns(s: SparkSession, corpusDir: String, table: String,
-                 cols: Seq[(String, org.apache.spark.sql.types.DataType)]): String = {
-    require(cols.nonEmpty, "addColumns needs at least one column")
-    require(cols.map(_._1).distinct.size == cols.size,
-      "duplicate column in ADD COLUMNS")
-    cols.foreach { case (n, _) =>
-      require(n.nonEmpty && !n.startsWith("_"), s"invalid column name '$n'") }
-    metadataSwing(s, corpusDir, table, widen = cols) { (m, phys, _) =>
-      val taken = (logicalColumns(m, phys) ++ phys.fieldNames).toSet
-      cols.foreach { case (n, _) =>
-        require(!taken.contains(n), s"column '$n' already exists") }
-      m
-    }
-  }
-
-  /** Write the zero-row schema-anchor file for [[addColumns]] into the
-    * new generation dir, named as a bucket-0 file so bucket discipline
-    * holds (zero rows trivially satisfy the bucket's key-placement and
-    * sort invariants).
-    */
-  private def writeSchemaAnchor(s: SparkSession, vpath: String,
-                                schema: org.apache.spark.sql.types.StructType): Unit = {
-    val stage = java.nio.file.Paths.get(vpath, "_anchor_stage")
-    s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .repartition(1).write.parquet(stage.toString)
-    val src = Option(stage.toFile.listFiles())
-      .flatMap(_.find(f => f.isFile && f.getName.endsWith(".parquet")))
-      .map(_.toPath)
-      .getOrElse(throw new IllegalStateException(
-        "empty-frame write produced no schema-anchor file"))
-    val n = src.getFileName.toString
-    val bucketed = if (n.contains(".c000")) n.replace(".c000", "_00000.c000")
-      else n.stripSuffix(".parquet") + "_00000.parquet"
-    java.nio.file.Files.move(src,
-      java.nio.file.Paths.get(vpath, bucketed))
-    graft.FsUtil.deleteRecursively(stage)
   }
 
   /** Persist one apply's change-feed slice (see [[ChangeFeedKey]]):
@@ -997,133 +816,13 @@ object MergeOps {
   val CommitGenCol = "_commit_generation"
   private[graft] val CdfDir = "_cdf"
 
-  /** The change data feed across generations `(fromGen, toGen]` — what
-    * [[applyToLayout]] changed, per generation, at delta cost (the
-    * sidecars are changeset-sized; the corpus is never read, let alone
-    * diffed). Requires [[ChangeFeedKey]] to have been on for every
-    * row-changing apply in the range — a missing sidecar fails loudly
-    * (deriving it silently via generationDiff would hide that the feed
-    * contract was broken). Generations with no row changes (metadata
-    * swings, compaction, rebucket) contribute empty slices. Slices
-    * speak the LOGICAL schema of their generation; across a rename
-    * boundary the union NULL-pads per era (consumers of a renamed feed
-    * project per slice, Delta CDF's column-mapping caveat).
-    * SQL spelling: `SELECT * FROM graft_changes('<table>', from[, to])`.
-    */
-  def changeFeed(s: SparkSession, corpusDir: String,
-                 table: String = "documents",
-                 fromGen: Int, toGen: Int = -1): DataFrame = {
-    val gens = generations(s, corpusDir, table).toMap
-    val top = if (toGen < 0) gens.keys.max else toGen
-    require(fromGen >= 0 && fromGen < top,
-      s"changeFeed needs 0 <= fromGen < toGen, got ($fromGen, $top)")
-    (fromGen + 1 to top).flatMap { g =>
-      val p = gens.getOrElse(g, throw new IllegalArgumentException(
-        s"generation $g of ($corpusDir, $table) is not retained — " +
-          s"have ${gens.keys.toSeq.sorted.mkString(", ")}"))
-      val cdf = java.nio.file.Paths.get(p, CdfDir)
-      val files = Option(cdf.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      if (java.nio.file.Files.isDirectory(cdf) && files.isEmpty) None
-      else if (!java.nio.file.Files.isDirectory(cdf)) {
-        // a generation may legitimately lack the sidecar only when it
-        // changed no rows (metadata swing / compaction / rebucket have
-        // no _cdf at all); a ROW-CHANGING apply without one means the
-        // feed was off — fail loudly rather than serve a gapped feed
-        if (isRowPreserving(s, gens, g)) None
-        else throw new IllegalStateException(
-          s"generation $g (${p}) carries no change-feed sidecar — " +
-            s"enable $ChangeFeedKey before applying, or derive this " +
-            "slice explicitly with MergeOps.generationDiff")
-      } else Some(
-        s.read.option("mergeSchema", "true").parquet(cdf.toString)
-          .drop(SchemaFpCol) // streaming-reader stamp, not feed payload
-          .withColumn(CommitGenCol, lit(g)))
-    }.reduceLeftOption((a, b) =>
-        a.unionByName(b, allowMissingColumns = true))
-      .getOrElse {
-        // every generation in range changed no rows — a legitimate
-        // quiet window: an EMPTY feed in the serving's logical shape
-        val tgt = CorpusLayout.ifPresent(s, corpusDir, table)
-          .getOrElse(throw new IllegalStateException(
-            s"no bucketed layout for ($corpusDir, $table)"))
-        tgt.limit(0)
-          .withColumn(ChangeTypeCol, lit(null).cast("string"))
-          .withColumn(CommitGenCol, lit(null).cast("int"))
-      }
-  }
-
-  /** A generation with no row-level changes: every data file of the
-    * previous generation rides forward under the same name (metadata
-    * swings and MOR links preserve names; compaction/rebucket REWRITE —
-    * those always re-derive from a served read, and a compaction of a
-    * feed-recorded chain still changes no rows, so name-preservation is
-    * the conservative test: false negatives fail loudly above, never
-    * silently).
-    */
-  private def isRowPreserving(s: SparkSession, gens: Map[Int, String],
-                              g: Int): Boolean =
-    gens.get(g - 1).exists { prev =>
-      // data file names AND dv-sidecar file names must ride forward
-      // unchanged: a MOR apply links every base name but rewrites the
-      // cumulative _dv — rows changed, the feed must not read empty
-      def names(d: String): Set[String] = {
-        def ls(dir: java.io.File, pre: String): Seq[String] =
-          Option(dir.listFiles()).getOrElse(Array.empty).toSeq
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .map(pre + _.getName)
-        ls(new java.io.File(d), "") ++
-          ls(new java.io.File(d, CorpusLayout.DvDir), "dv/") ++
-          ls(new java.io.File(new java.io.File(d, CorpusLayout.DvDir),
-            "tombstones"), "dv/t/") ++
-          ls(new java.io.File(new java.io.File(d, CorpusLayout.DvDir),
-            "deltas"), "dv/d/")
-      }.toSet
-      val p = names(prev); val c = names(gens(g))
-      p.nonEmpty && p.subsetOf(c)
-    }
-
-  private def metadataSwing(s: SparkSession, corpusDir: String, table: String,
-                            widen: Seq[(String, org.apache.spark.sql.types.DataType)] = Seq.empty)
-      (update: (Map[String, Option[String]],
-        org.apache.spark.sql.types.StructType, String) => Map[String, Option[String]]): String = {
-    val keyCol = CorpusLayout.keyed.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
-    val t = CorpusLayout.tableName(table, corpusDir)
-    require(CorpusLayout.ifPresent(s, corpusDir, table).isDefined,
-      s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first")
-    GenerationLease.withLease(s, corpusDir, table) {
-      CorpusLayout.resyncServing(s, corpusDir, table)
-      val (curLoc, b) = tableLayout(s, t)
-      val vpath = nextGenerationPath(s, corpusDir, table)
-      val physSchema = CorpusLayout.physicalSchema(s, t)
-      val newMapping = update(CorpusLayout.readMapping(curLoc), physSchema, keyCol)
-      val widened = org.apache.spark.sql.types.StructType(
-        physSchema.fields ++ widen.map { case (n, dt) =>
-          org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
-      linkGenerationForward(curLoc, vpath, withDv = true)
-      if (widen.nonEmpty) writeSchemaAnchor(s, vpath, widened)
-      if (newMapping.nonEmpty) CorpusLayout.writeMapping(vpath, newMapping)
-      CorpusLayout.writeBucketsMarker(vpath, b)
-      java.nio.file.Files.write(java.nio.file.Paths.get(vpath, "_SUCCESS"),
-        Array.emptyByteArray)
-      swingCatalog(s, t, vpath, keyCol, b, widened.toDDL)
-      CorpusLayout.bumpEpoch(s, corpusDir, table, vpath)
-      // every file name is unchanged → the stats manifest carries
-      // verbatim (stats key on PHYSICAL columns, which didn't move)
-      graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
-      vpath
-    }
-  }
-
   /** Generation dirs of a layout table, oldest→newest: generation 0 is
     * the base `materialize` build at `<table>`, MERGE applies append
     * `<table>_vN`. Pure directory listing — no Spark job.
     */
   def generations(s: SparkSession, corpusDir: String,
                   table: String = "documents"): Seq[(Int, String)] =
-    CorpusLayout.listGenerations(s, corpusDir, table)
+    GenerationChain.generations(s, Chain(corpusDir, table, partitioned = false))
 
   // ── Corpus snapshots: one marker pinning the (table → generation)
   // assignment of EVERY layout table at a moment — the reproducibility
@@ -1187,100 +886,6 @@ object MergeOps {
     }.toSet
   }
 
-  // ── TAGS: named generation refs (Iceberg's tag shape) — release
-  // management for the chain: `tagGeneration("v2-train")` pins the
-  // generation a run read, `VERSION AS OF 'v2-train'` reads it forever
-  // (vacuum keeps tagged generations like snapshot pins), `dropTag`
-  // releases the bytes at the next vacuum. One tiny file per (table,
-  // tag) under the layout root — same durability story as snapshots.
-
-  private def tagsDir(s: SparkSession, corpusDir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(layoutRoot(s, corpusDir), "tags")
-
-  private[graft] def tagFile(s: SparkSession, corpusDir: String, table: String,
-                             name: String): java.nio.file.Path = {
-    require(name.matches("[A-Za-z][A-Za-z0-9_.-]*"),
-      s"invalid tag name '$name' — [A-Za-z][A-Za-z0-9_.-]*")
-    tagsDir(s, corpusDir).resolve(s"${table}__$name")
-  }
-
-  /** Tag a generation (default: the served one) with `name`. Fails on
-    * an existing tag (retagging is drop + create — an accidental move
-    * of a name a training run depends on must be loud). Returns the
-    * tagged generation dir.
-    */
-  def tagGeneration(s: SparkSession, corpusDir: String,
-                    table: String = "documents",
-                    name: String, generation: Int = -1): String =
-    GenerationLease.withLease(s, corpusDir, table) {
-      CorpusLayout.resyncServing(s, corpusDir, table)
-      val gens = generations(s, corpusDir, table)
-      val g = if (generation < 0) gens.last._1 else generation
-      val p = gens.toMap.getOrElse(g, throw new IllegalArgumentException(
-        s"generation $g of ($corpusDir, $table) is not retained — " +
-          s"have ${gens.map(_._1).mkString(", ")}"))
-      val f = tagFile(s, corpusDir, table, name)
-      java.nio.file.Files.createDirectories(f.getParent)
-      require(!java.nio.file.Files.exists(f),
-        s"tag '$name' already exists for $table (generation " +
-          s"${tags(s, corpusDir, table).getOrElse(name, -1)}) — dropTag first")
-      java.nio.file.Files.write(f, s"$g\t$p".getBytes("UTF-8"))
-      p
-    }
-
-  /** Drop a tag; returns whether it existed. The tagged generation's
-    * bytes reclaim at the NEXT vacuum (tags pin, they don't own).
-    */
-  def dropTag(s: SparkSession, corpusDir: String, table: String = "documents",
-              name: String): Boolean =
-    java.nio.file.Files.deleteIfExists(tagFile(s, corpusDir, table, name))
-
-  /** Retained tags of a table: name → generation number. */
-  def tags(s: SparkSession, corpusDir: String,
-           table: String = "documents"): Map[String, Int] = {
-    val dir = tagsDir(s, corpusDir)
-    if (!java.nio.file.Files.isDirectory(dir)) Map.empty
-    else {
-      val kids = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(s"${table}__"))
-          .map { f =>
-            val name = f.getFileName.toString.stripPrefix(s"${table}__")
-            val g = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-              .split("\t", 2)(0).toInt
-            name -> g
-          }.toMap
-      } finally kids.close()
-    }
-  }
-
-  private[graft] def tagPins(s: SparkSession, corpusDir: String,
-                             table: String): Set[String] = {
-    val dir = tagsDir(s, corpusDir)
-    if (!java.nio.file.Files.isDirectory(dir)) Set.empty
-    else {
-      val kids = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(s"${table}__"))
-          .map(f => java.nio.file.Paths.get(new String(
-            java.nio.file.Files.readAllBytes(f), "UTF-8").split("\t", 2)(1))
-            .normalize.toString)
-          .toSet
-      } finally kids.close()
-    }
-  }
-
-  /** Snapshot pins ∪ tag pins — the full set vacuum and the compaction
-    * bound must respect.
-    */
-  private[graft] def pins(s: SparkSession, corpusDir: String,
-                          table: String): Set[String] =
-    snapshotPins(s, corpusDir, table) ++ tagPins(s, corpusDir, table)
-
   /** The generation assignment snapshot K pinned: table → raw frame of
     * the pinned generation dir (audit/reproduce surface, like
     * [[readGeneration]]).
@@ -1308,36 +913,6 @@ object MergeOps {
   /** Unpin snapshot K; its generations become vacuum-eligible. */
   def dropSnapshot(s: SparkSession, corpusDir: String, k: Int): Unit =
     java.nio.file.Files.deleteIfExists(snapshotDir(s, corpusDir).resolve(s"s$k"))
-
-  /** Reclaim drained generations: delete every generation dir strictly
-    * older than the `keepLast` most recent ones, never touching the one
-    * the catalog currently serves or any generation a retained
-    * [[snapshot]] pins. Copy-on-write makes this safe at any point AFTER
-    * old readers drain: shared bytes are hard links, so an inode
-    * referenced by a surviving generation outlives the deletion of every
-    * older dir that also linked it. Returns the deleted paths.
-    */
-  def vacuum(s: SparkSession, corpusDir: String, table: String = "documents",
-             keepLast: Int = 2): Seq[String] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    GenerationLease.withLease(s, corpusDir, table) {
-    // resync (subsumes the fresh-JVM re-attach): a concurrent writer may
-    // have advanced the chain — deleting "old" generations judged from a
-    // stale catalog could reclaim the dir an in-flight apply links from
-    CorpusLayout.resyncServing(s, corpusDir, table)
-    val gens = generations(s, corpusDir, table)
-    val served = tableLayout(s, CorpusLayout.tableName(table, corpusDir))._1
-    val servedNorm = java.nio.file.Paths.get(served).normalize.toString
-    val pinned = pins(s, corpusDir, table) + servedNorm
-    val doomed = gens.dropRight(keepLast)
-      .filterNot { case (_, p) =>
-        pinned.contains(java.nio.file.Paths.get(p).normalize.toString) }
-    doomed.map { case (_, p) =>
-      graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p))
-      p
-    }
-    } // GenerationLease.withLease
-  }
 
   /** Time-travel read: a not-yet-vacuumed generation as a plain parquet
     * frame (audit/diff surface — NOT the bucketed catalog table; serve
@@ -1514,11 +1089,12 @@ object MergeOps {
 
   /** Fold the served generation into a FRESH one — same bucket count,
     * every byte rewritten, no inode shared with any ancestor — so
-    * [[vacuum]] can reclaim a long trickle chain outright (streaming
-    * merge burns one generation per non-empty micro-batch; hard links
-    * keep the chain cheap, but the directory entries and the link-chain
-    * metadata still accrete — this is [[graft.streaming.ParquetSink]]'s
-    * `compact` verb for the generation chain). The rewrite ships ZERO
+    * [[GenerationChain.vacuum]] can reclaim a long trickle chain
+    * outright (streaming merge burns one generation per non-empty
+    * micro-batch; hard links keep the chain cheap, but the directory
+    * entries and the link-chain metadata still accrete — this is
+    * [[graft.streaming.ParquetSink]]'s `compact` verb for the generation
+    * chain). The rewrite ships ZERO
     * Exchange: with auto-bucketed-scan forced on, the bucketed read
     * yields partition i ≡ bucket i, and the bucketBy writer then emits
     * exactly one fresh file per bucket without redistributing anything —
@@ -1532,12 +1108,13 @@ object MergeOps {
       throw new IllegalArgumentException(
         s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
     val t = CorpusLayout.tableName(table, corpusDir)
-    GenerationLease.withLease(s, corpusDir, table) {
-    CorpusLayout.resyncServing(s, corpusDir, table)
+    val chain = Chain(corpusDir, table, partitioned = false)
+    GenerationLease.withLease(s, corpusDir, chain.key) {
+    GenerationChain.resync(s, chain)
     val target = CorpusLayout.ifPresent(s, corpusDir, table).getOrElse(
       throw new IllegalStateException(
         s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first"))
-    val vpath = nextGenerationPath(s, corpusDir, table)
+    val vpath = GenerationChain.nextGeneration(s, chain)
     val (curLoc, b) = tableLayout(s, t)
     // a cluster spec survives the fold: its columns rebase through the
     // mapping (the fold writes logical names), _zv recomputes, files
@@ -1575,14 +1152,9 @@ object MergeOps {
     // which the conservative row-preservation test cannot vouch for)
     if (changeFeedOn(s)) java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(vpath, CdfDir))
-    CorpusLayout.writeBucketsMarker(vpath, b)
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    CorpusLayout.refreshRelationCache(s, t)
-    CorpusLayout.bumpEpoch(s, corpusDir, table, vpath)
-    // every file name changed → the manifest carry degenerates to a full
-    // re-stat over the compacted generation (no-op without a manifest)
-    graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
+    // every file name changed → the swing's manifest carry degenerates
+    // to a full re-stat over the compacted generation
+    GenerationChain.swing(s, chain, curLoc, vpath, b, None)
     vpath
     } // GenerationLease.withLease
   }
@@ -1600,10 +1172,11 @@ object MergeOps {
     * 1/1000-corpus trickle with a 25% IO budget wants maxGenerations
     * ≈ 4000, NOT a small number — and that is fine, because the chain's
     * cost between folds is metadata only (CoW hard links share bytes;
-    * [[vacuum]] already reclaims unpinned generation DIRS), so the fold
-    * is directory/inode hygiene, not byte reclaim. Small bounds
-    * (8–64) are right only when batches are a meaningful fraction of
-    * the corpus (nightly re-crawls), where the ratio itself is small.
+    * [[GenerationChain.vacuum]] already reclaims unpinned generation
+    * DIRS), so the fold is directory/inode hygiene, not byte reclaim.
+    * Small bounds (8–64) are right only when batches are a meaningful
+    * fraction of the corpus (nightly re-crawls), where the ratio itself
+    * is small.
     * Pair with keepLast ≥ 2 so one pre-compaction generation survives
     * for in-flight readers. The bound counts only RECLAIMABLE
     * generations: snapshot-pinned ones survive every vacuum by
@@ -1627,13 +1200,14 @@ object MergeOps {
       s"keepLast ($keepLast) must be < maxGenerations ($maxGenerations): " +
         "vacuum retains keepLast generations after a fold, so the bound " +
         "would re-trigger on every apply")
-    val pinned = pins(s, corpusDir, table)
+    val chain = Chain(corpusDir, table, partitioned = false)
+    val pinned = GenerationChain.pins(s, chain)
     val reclaimable = generations(s, corpusDir, table).count { case (_, p) =>
       !pinned.contains(java.nio.file.Paths.get(p).normalize.toString)
     }
     if (reclaimable > maxGenerations) {
       val p = compactGenerations(s, corpusDir, table)
-      vacuum(s, corpusDir, table, keepLast)
+      GenerationChain.vacuum(s, chain, keepLast)
       Some(p)
     } else None
   }
@@ -1660,12 +1234,13 @@ object MergeOps {
       throw new IllegalArgumentException(
         s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
     val t = CorpusLayout.tableName(table, corpusDir)
-    GenerationLease.withLease(s, corpusDir, table) {
-    CorpusLayout.resyncServing(s, corpusDir, table)
+    val chain = Chain(corpusDir, table, partitioned = false)
+    GenerationLease.withLease(s, corpusDir, chain.key) {
+    GenerationChain.resync(s, chain)
     val target = CorpusLayout.ifPresent(s, corpusDir, table).getOrElse(
       throw new IllegalStateException(
         s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first"))
-    val vpath = nextGenerationPath(s, corpusDir, table)
+    val vpath = GenerationChain.nextGeneration(s, chain)
     val (curLoc, _) = tableLayout(s, t)
     // a cluster spec survives the rebucket: columns rebase through the
     // mapping (full rewrite), _zv recomputes, SORTED BY stays truthful,
@@ -1679,14 +1254,9 @@ object MergeOps {
     // compactGenerations)
     if (changeFeedOn(s)) java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(vpath, CdfDir))
-    CorpusLayout.writeBucketsMarker(vpath, newBuckets)
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    CorpusLayout.refreshRelationCache(s, t)
-    CorpusLayout.bumpEpoch(s, corpusDir, table, vpath)
-    // every file name changed, so the carry degenerates to a full
-    // re-stat over the new generation — still the right upkeep
-    graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
+    // every file name changed, so the swing's manifest carry
+    // degenerates to a full re-stat over the new generation
+    GenerationChain.swing(s, chain, curLoc, vpath, newBuckets, None)
     vpath
     } // GenerationLease.withLease
   }

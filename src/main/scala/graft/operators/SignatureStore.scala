@@ -409,7 +409,7 @@ object SignatureStore {
     * `comp_table_vN` dir except the ones the catalog currently serves
     * (and the unversioned base dirs, which may share linked bytes —
     * hard links make deleting either side safe once readers drain, the
-    * [[MergeOps.vacuum]] argument). Mirrors
+    * [[graft.sources.GenerationChain.vacuum]] argument). Mirrors
     * [[VectorIndexStore.pruneOldVersions]]. Returns deleted paths.
     */
   def pruneOldGenerations(s: SparkSession, corpusDir: String): Seq[String] =

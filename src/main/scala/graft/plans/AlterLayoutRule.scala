@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.CorpusLayout
+import graft.sources.GenerationChain
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedFieldName, UnresolvedTable}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -9,14 +9,13 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.DataType
 
 /** SQL surface for schema evolution over a served corpus layout
-  * (SURVEY §2.I): `ALTER TABLE <graft_cl_…> ADD COLUMNS / RENAME COLUMN
-  * / DROP COLUMN` lower onto the metadata-only evolution verbs —
-  * [[graft.operators.MergeOps.renameColumn]] / `dropColumn` (the
-  * `_MAPPING` swing: every byte hard-links) and, for ADD, an EMPTY
-  * evolving changeset through `applyToLayout(evolveSchema = true)` (the
-  * union-schema adoption path: zero rows touch zero buckets, so the new
-  * generation hard-links every file and untouched rows read the column
-  * as NULL — the Delta/Iceberg metadata-only ADD COLUMN).
+  * (SURVEY §2.I): `ALTER TABLE <graft_cl_… | graft_plt_…> ADD COLUMNS /
+  * RENAME COLUMN / DROP COLUMN` lower onto the metadata-only evolution
+  * verbs of either layout — [[graft.sources.GenerationChain.renameColumn]]
+  * / `dropColumn` (the `_MAPPING` swing: every byte hard-links) and
+  * `addColumns` (every byte hard-links plus one footer-only schema
+  * anchor, so untouched rows read the column as NULL — the
+  * Delta/Iceberg metadata-only ADD COLUMN).
   *
   * Placement is the [[TimeTravelLayoutRule]] recipe, NOT
   * [[MergeIntoLayoutRule]]'s: Spark's `ResolveSessionCatalog` throws
@@ -26,10 +25,11 @@ import org.apache.spark.sql.types.DataType
   * nothing resolved (it matches the table by NAME; a name that is not a
   * served layout keeps Spark's stock path and its stock error).
   *
-  * Loud limits: single-part (non-nested) names only; the layout key can
-  * be neither renamed nor dropped (row identity); added columns must be
-  * nullable with no DEFAULT and no position (untouched rows read NULL —
-  * a NOT NULL or defaulted column would lie about unrewritten files).
+  * Loud limits: single-part (non-nested) names only; neither the layout
+  * key (row identity) nor a partition column can be renamed or dropped;
+  * added columns must be nullable with no DEFAULT and no position
+  * (untouched rows read NULL — a NOT NULL or defaulted column would lie
+  * about unrewritten files).
   */
 class AlterLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -39,14 +39,7 @@ class AlterLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def layoutName(p: LogicalPlan): Option[String] = p match {
     case u: UnresolvedTable
         if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_cl_") &&
-          CorpusLayout.corpusForTable(session, u.multipartIdentifier.head).isDefined =>
-      Some(u.multipartIdentifier.head)
-    case u: UnresolvedTable
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_plt_") &&
-          graft.sources.PartitionedLayout
-            .corpusForTable(session, u.multipartIdentifier.head).isDefined =>
+          GenerationChain.forCatalogName(session, u.multipartIdentifier.head).isDefined =>
       Some(u.multipartIdentifier.head)
     case _ => None
   }
@@ -101,32 +94,18 @@ case class AlterLayoutCommand(tableName: String,
     extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.MergeOps
-    val f = (msg: String) => throw new IllegalArgumentException(
-      s"ALTER TABLE $tableName: $msg")
-    val (logicalTable, keyCol) = LayoutSql.tableKey(tableName,
-      m => throw new IllegalArgumentException(s"ALTER TABLE $tableName: $m"))
-    val (corpusDir, tgt) =
-      LayoutSql.servedTarget(spark, tableName, logicalTable, "ALTER TABLE")
-    val partitioned = LayoutSql.isPartitioned(tableName)
+    val c = GraftSqlParser.resolveAny(spark, tableName, "ALTER TABLE")
     action match {
       case AlterLayoutCommand.Rename(from, to) =>
-        if (partitioned) graft.sources.PartitionedLayout
-          .renameColumn(spark, corpusDir, logicalTable, from, to)
-        else MergeOps.renameColumn(spark, corpusDir, logicalTable, from, to)
+        GenerationChain.renameColumn(spark, c, from, to)
       case AlterLayoutCommand.Drop(cols, ifExists) =>
-        cols.foreach { c =>
-          if (!ifExists || tgt.columns.contains(c)) {
-            if (partitioned) graft.sources.PartitionedLayout
-              .dropColumn(spark, corpusDir, logicalTable, c)
-            else MergeOps.dropColumn(spark, corpusDir, logicalTable, c)
-          }
-        }
+        val present = GenerationChain.served(spark, c).getOrElse(
+          throw new IllegalStateException(
+            s"ALTER TABLE $tableName: the layout table is not served")).columns
+        cols.filter(col => !ifExists || present.contains(col))
+          .foreach(GenerationChain.dropColumn(spark, c, _))
       case AlterLayoutCommand.Add(cols) =>
-        if (partitioned) graft.sources.PartitionedLayout
-          .addColumns(spark, corpusDir, logicalTable, cols)
-        else MergeOps.addColumns(spark, corpusDir, logicalTable, cols)
+        GenerationChain.addColumns(spark, c, cols)
     }
     Seq.empty
   }

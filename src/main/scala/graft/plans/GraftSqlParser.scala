@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.CorpusLayout
+import graft.sources.{CorpusLayout, GenerationChain}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
@@ -18,19 +18,30 @@ import org.apache.spark.sql.types.{StructType, StructField, StringType, IntegerT
   * OPTIMIZE / DESCRIBE HISTORY:
   *
   * {{{
-  *   DESCRIBE HISTORY graft_cl_…                    -- the generation chain
-  *   VACUUM graft_cl_… [RETAIN <n> GENERATIONS]     -- MergeOps.vacuum
-  *   OPTIMIZE graft_cl_…                            -- MergeOps.compactGenerations
+  *   DESCRIBE HISTORY <t>                       -- GenerationChain.history
+  *   VACUUM <t> [RETAIN <n> GENERATIONS]        -- GenerationChain.vacuum
+  *   ALTER TABLE <t> CREATE TAG <name>
+  *     [AS OF VERSION <n>]                      -- GenerationChain.tagGeneration
+  *   ALTER TABLE <t> DROP TAG <name>            -- GenerationChain.dropTag
+  *   SHOW TAGS <t>                              -- GenerationChain.tags
+  *   OPTIMIZE <t>                               -- MergeOps.compactGenerations /
+  *                                                 PartitionedLayout.compact
+  *   CHECK TABLE <t>                            -- Fsck.checkTable /
+  *                                                 PartitionedLayout.checkTable
+  *   CREATE TABLE <table> IN CORPUS '<dir>' …   -- layout birth
   * }}}
   *
-  * Only statements whose target identifier carries the `graft_cl_`
-  * prefix are claimed — everything else (including DESCRIBE HISTORY on
-  * other tables) delegates to Spark's stock parser verbatim, stock
-  * errors included. The commands lower onto the SAME lease-fenced verbs
-  * the Scala API uses, so SQL maintenance inherits resync, pin
-  * awareness and the single-writer fence; DESCRIBE HISTORY is a pure
-  * driver-side listing (generation, files, bytes, served/pinned/dv/
-  * mapped flags) — the audit view of the chain, no Spark job.
+  * `<t>` is a `graft_cl_…` (flat) or `graft_plt_…` (partitioned) layout
+  * table; the chain verbs resolve it once to a [[GenerationChain.Chain]]
+  * and run the same code for both layouts. Only statements whose target
+  * identifier carries one of those prefixes are claimed — everything
+  * else (including DESCRIBE HISTORY on other tables) delegates to
+  * Spark's stock parser verbatim, stock errors included. The commands
+  * lower onto the SAME lease-fenced verbs the Scala API uses, so SQL
+  * maintenance inherits resync, pin awareness and the single-writer
+  * fence; DESCRIBE HISTORY is a pure driver-side listing (generation,
+  * files, bytes, served/pinned/dv/mapped flags) — the audit view of the
+  * chain, no Spark job.
   */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
@@ -77,9 +88,9 @@ object GraftSqlParser {
   // fall through to the stock parser (and its stock errors)
   private val DescribeHistoryRe =
     """(?is)\s*DESCRIBE\s+HISTORY\s+(graft_(?:cl|plt)_\w+)\s*;?\s*""".r
-  // maintenance verbs cover BOTH layout tiers: the flat graft_cl_
-  // tables route to MergeOps/Fsck, partitioned graft_plt_ ones to
-  // PartitionedLayout's own vacuum/compact/checkTable
+  // maintenance verbs cover BOTH layout tiers: the chain verbs run in
+  // GenerationChain for both; OPTIMIZE and CHECK TABLE route graft_cl_
+  // tables to MergeOps/Fsck and graft_plt_ ones to PartitionedLayout
   private val VacuumRe =
     """(?is)\s*VACUUM\s+(graft_(?:cl|plt)_\w+)(\s+RETAIN\s+(\d+)\s+GENERATIONS)?\s*;?\s*""".r
   private val OptimizeRe =
@@ -104,39 +115,19 @@ object GraftSqlParser {
   private val CreateCorpusRe =
     """(?is)\s*CREATE\s+TABLE\s+(\w+)\s+IN\s+CORPUS\s+'([^']+)'(?:\s+INTO\s+(\d+)\s+BUCKETS)?(?:\s+PARTITIONED\s+BY\s+(\w+))?(?:\s+AS\s+(.+?))?\s*;?\s*""".r
 
-  private[graft] def resolve(spark: SparkSession, tableName: String,
-                             verb: String): (String, String) = {
-    val (logicalTable, _) = LayoutSql.tableKey(tableName,
-      m => throw new IllegalArgumentException(s"$verb $tableName: $m"))
-    val (corpusDir, _) = CorpusLayout.corpusForTable(spark, tableName)
-      .getOrElse(throw new IllegalStateException(
+  /** The generation chain a layout table name serves. */
+  private[graft] def resolveAny(spark: SparkSession, tableName: String,
+                                verb: String): GenerationChain.Chain =
+    GenerationChain.forCatalogName(spark, tableName).getOrElse(
+      throw new IllegalStateException(
         s"$verb $tableName: no _CORPUS marker maps this layout table " +
           "back to its corpus under the session's layout base"))
-    (corpusDir, logicalTable)
-  }
-
-  /** Resolve either layout tier: (corpusDir, table, isPartitioned). */
-  private[graft] def resolveAny(spark: SparkSession, tableName: String,
-                                verb: String): (String, String, Boolean) =
-    if (tableName.startsWith("graft_plt_")) {
-      val (corpusDir, table) = graft.sources.PartitionedLayout
-        .corpusForTable(spark, tableName)
-        .getOrElse(throw new IllegalStateException(
-          s"$verb $tableName: no _CORPUS marker maps this partitioned " +
-            "layout table back to its corpus under the session's layout base"))
-      (corpusDir, table, true)
-    } else {
-      val (corpusDir, table) = resolve(spark, tableName, verb)
-      (corpusDir, table, false)
-    }
 }
 
-/** `DESCRIBE HISTORY <layout>` — the generation chain as rows. Pure
-  * driver-side listing (the same directory walk `generations` does):
-  * per generation its file count, byte footprint (hard-linked bytes
-  * count in every generation that links them — the inode-dedup'd
-  * number is vacuum's concern), and the served / snapshot-pinned /
-  * dv-sidecar / column-mapped flags.
+/** `DESCRIBE HISTORY <layout>` — the generation chain as rows
+  * ([[GenerationChain.history]]): per generation its base data file
+  * count and bytes, and the served / pinned / dv-sidecar /
+  * column-mapped flags. Pure driver-side listing, no Spark job.
   */
 case class DescribeHistoryCommand(tableName: String)
     extends LeafRunnableCommand {
@@ -152,61 +143,12 @@ case class DescribeHistoryCommand(tableName: String)
     StructField("dv", BooleanType, nullable = false),
     StructField("mapped", BooleanType, nullable = false))))
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    import graft.operators.MergeOps
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "DESCRIBE HISTORY")
-    if (partitioned) return runPartitioned(spark, corpusDir, table)
-    val servedLoc = CorpusLayout.ifPresent(spark, corpusDir, table)
-      .flatMap(_ => CorpusLayout.servedGeneration(spark, corpusDir, table))
-      .map(p => java.nio.file.Paths.get(p).normalize.toString)
-    val pins = MergeOps.pins(spark, corpusDir, table)
-    MergeOps.generations(spark, corpusDir, table).map { case (g, p) =>
-      val dir = new java.io.File(p)
-      val data = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val norm = java.nio.file.Paths.get(p).normalize.toString
-      Row(g, p, new java.sql.Timestamp(CorpusLayout.commitTsOf(p)),
-        data.length, data.map(_.length).sum,
-        servedLoc.contains(norm), pins.contains(norm),
-        CorpusLayout.hasDv(p), CorpusLayout.readMapping(p).nonEmpty)
-    }
-  }
-
-  /** The partitioned chain's history: same row shape — files/bytes walk
-    * the partition subdirs, dv = any per-partition sidecar, pinned =
-    * tag-pinned (partitioned chains have their own tag namespace),
-    * mapped = a `_MAPPING` marker on the generation.
-    */
-  private def runPartitioned(spark: SparkSession, corpusDir: String,
-                             table: String): Seq[Row] = {
-    import graft.sources.PartitionedLayout
-    val servedLoc = scala.util.Try(graft.operators.MergeOps.tableLayout(
-        spark, PartitionedLayout.tableName(table, corpusDir))._1)
-      .toOption.map(p => java.nio.file.Paths.get(p).normalize.toString)
-    val pinnedGens = PartitionedLayout.tags(spark, corpusDir, table)
-      .values.toSet
-    PartitionedLayout.generations(spark, corpusDir, table).map { case (g, p) =>
-      val base = java.nio.file.Paths.get(p)
-      val walk = java.nio.file.Files.walk(base)
-      val data = try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(f => java.nio.file.Files.isRegularFile(f) &&
-            f.getFileName.toString.endsWith(".parquet"))
-          .map(java.nio.file.Files.size(_)).toVector
-      } finally walk.close()
-      val norm = java.nio.file.Paths.get(p).normalize.toString
-      Row(g, p, new java.sql.Timestamp(CorpusLayout.commitTsOf(p)),
-        data.length, data.sum,
-        servedLoc.contains(norm), pinnedGens.contains(g),
-        PartitionedLayout.dvParts(p).nonEmpty,
-        CorpusLayout.readMapping(p).nonEmpty)
-    }
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    GenerationChain.history(spark,
+      GraftSqlParser.resolveAny(spark, tableName, "DESCRIBE HISTORY"))
 }
 
-/** `VACUUM <layout> [RETAIN n GENERATIONS]` — [[graft.operators.MergeOps.vacuum]]
+/** `VACUUM <layout> [RETAIN n GENERATIONS]` — [[GenerationChain.vacuum]]
   * through SQL: reclaims drained, unpinned, non-served generations,
   * returning the deleted paths.
   */
@@ -216,14 +158,9 @@ case class VacuumLayoutCommand(tableName: String, keepLast: Int)
   override val output: Seq[Attribute] = DataTypeUtils.toAttributes(StructType(Seq(
     StructField("deleted_path", StringType, nullable = false))))
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "VACUUM")
-    (if (partitioned)
-       graft.sources.PartitionedLayout.vacuum(spark, corpusDir, table, keepLast)
-     else graft.operators.MergeOps.vacuum(spark, corpusDir, table, keepLast))
-      .map(Row(_))
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    GenerationChain.vacuum(spark,
+      GraftSqlParser.resolveAny(spark, tableName, "VACUUM"), keepLast).map(Row(_))
 }
 
 /** `OPTIMIZE <layout>` — [[graft.operators.MergeOps.compactGenerations]]
@@ -237,17 +174,16 @@ case class OptimizeLayoutCommand(tableName: String)
     StructField("new_generation", StringType, nullable = false))))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "OPTIMIZE")
+    val c = GraftSqlParser.resolveAny(spark, tableName, "OPTIMIZE")
     Seq(Row(
-      if (partitioned)
-        graft.sources.PartitionedLayout.compact(spark, corpusDir, table)
-      else graft.operators.MergeOps.compactGenerations(spark, corpusDir, table)))
+      if (c.partitioned)
+        graft.sources.PartitionedLayout.compact(spark, c.corpusDir, c.table)
+      else graft.operators.MergeOps.compactGenerations(spark, c.corpusDir, c.table)))
   }
 }
 
 /** `ALTER TABLE <layout> CREATE TAG <name> [AS OF VERSION n]` —
-  * [[graft.operators.MergeOps.tagGeneration]]: a named generation ref
+  * [[GenerationChain.tagGeneration]]: a named generation ref
   * (Iceberg's tag shape). Tagged generations survive VACUUM; `VERSION
   * AS OF '<name>'` reads them.
   */
@@ -258,13 +194,8 @@ case class CreateTagCommand(tableName: String, tag: String,
     StructField("tagged_generation", StringType, nullable = false))))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "CREATE TAG")
-    Seq(Row(
-      if (partitioned) graft.sources.PartitionedLayout.tagGeneration(
-        spark, corpusDir, table, tag, generation)
-      else graft.operators.MergeOps.tagGeneration(
-        spark, corpusDir, table, tag, generation)))
+    Seq(Row(GenerationChain.tagGeneration(spark,
+      GraftSqlParser.resolveAny(spark, tableName, "CREATE TAG"), tag, generation)))
   }
 }
 
@@ -278,12 +209,8 @@ case class DropTagCommand(tableName: String, tag: String)
     StructField("existed", BooleanType, nullable = false))))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "DROP TAG")
-    Seq(Row(
-      if (partitioned)
-        graft.sources.PartitionedLayout.dropTag(spark, corpusDir, table, tag)
-      else graft.operators.MergeOps.dropTag(spark, corpusDir, table, tag)))
+    Seq(Row(GenerationChain.dropTag(spark,
+      GraftSqlParser.resolveAny(spark, tableName, "DROP TAG"), tag)))
   }
 }
 
@@ -295,11 +222,8 @@ case class ShowTagsCommand(tableName: String) extends LeafRunnableCommand {
     StructField("generation", IntegerType, nullable = false))))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "SHOW TAGS")
-    (if (partitioned)
-       graft.sources.PartitionedLayout.tags(spark, corpusDir, table)
-     else graft.operators.MergeOps.tags(spark, corpusDir, table))
+    GenerationChain.tags(spark,
+      GraftSqlParser.resolveAny(spark, tableName, "SHOW TAGS"))
       .toSeq.sorted.map { case (n, g) => Row(n, g) }
   }
 }
@@ -318,11 +242,10 @@ case class CheckLayoutCommand(tableName: String)
     StructField("details", StringType, nullable = false))))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "CHECK TABLE")
-    (if (partitioned)
-       graft.sources.PartitionedLayout.checkTable(spark, corpusDir, table)
-     else graft.operators.Fsck.checkTable(spark, corpusDir, table))
+    val c = GraftSqlParser.resolveAny(spark, tableName, "CHECK TABLE")
+    (if (c.partitioned)
+       graft.sources.PartitionedLayout.checkTable(spark, c.corpusDir, c.table)
+     else graft.operators.Fsck.checkTable(spark, c.corpusDir, c.table))
       .map(f => Row(f.check, f.status, f.details))
   }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.sources.CorpusLayout
+import graft.operators.MergeOps
+import graft.sources.{CorpusLayout, GenerationChain, PartitionedLayout}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -39,8 +40,7 @@ class TimeTravelLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   /** Resolve VERSION/TIMESTAMP AS OF operands to a generation number
     * against a chain's retained (gen, path) list. `tags` is the chain's
-    * name→generation map (empty-by-construction chains pass
-    * `Map.empty` and fail the non-integer case loudly).
+    * name→generation map, read only for a non-integer operand.
     */
   private def resolveGeneration(name: String, ts: Option[Expression],
                                 version: Option[String],
@@ -76,7 +76,7 @@ class TimeTravelLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
         s"time travel on $name needs VERSION AS OF <generation | " +
           "'tag'> or TIMESTAMP AS OF <ts>"))
       // an integer reads that generation; anything else resolves as
-      // a TAG (MergeOps.tagGeneration — Iceberg's `VERSION AS OF
+      // a TAG (GenerationChain.tagGeneration — Iceberg's `VERSION AS OF
       // 'ref'` spelling), failing with the available names
       try gen.toInt catch {
         case _: NumberFormatException =>
@@ -90,33 +90,16 @@ class TimeTravelLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version)
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_cl_") =>
+        if u.multipartIdentifier.size == 1 =>
       val name = u.multipartIdentifier.head
-      CorpusLayout.corpusForTable(session, name) match {
-        case None => tt // no marker maps it — keep Spark's stock path
-        case Some((corpusDir, table)) =>
+      GenerationChain.forCatalogName(session, name) match {
+        case None => tt // not a layout table — keep Spark's stock path
+        case Some(c) =>
           val n = resolveGeneration(name, ts, version,
-            graft.operators.MergeOps.generations(session, corpusDir, table),
-            graft.operators.MergeOps.tags(session, corpusDir, table))
-          graft.operators.MergeOps.readGeneration(session, corpusDir, table, n)
-            .queryExecution.analyzed
-      }
-    // partitioned arm: same ledger semantics over the partitioned
-    // chain's own generations and tag namespace
-    case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version)
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_plt_") =>
-      val name = u.multipartIdentifier.head
-      graft.sources.PartitionedLayout.corpusForTable(session, name) match {
-        case None => tt
-        case Some((corpusDir, table)) =>
-          val n = resolveGeneration(name, ts, version,
-            graft.sources.PartitionedLayout
-              .generations(session, corpusDir, table),
-            graft.sources.PartitionedLayout.tags(session, corpusDir, table))
-          graft.sources.PartitionedLayout
-            .readGeneration(session, corpusDir, table, n)
+            GenerationChain.generations(session, c), GenerationChain.tags(session, c))
+          (if (c.partitioned)
+             PartitionedLayout.readGeneration(session, c.corpusDir, c.table, n)
+           else MergeOps.readGeneration(session, c.corpusDir, c.table, n))
             .queryExecution.analyzed
       }
   }

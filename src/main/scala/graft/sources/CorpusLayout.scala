@@ -202,30 +202,6 @@ object CorpusLayout {
       java.nio.file.Paths.get(path, BucketsMarker),
       buckets.toString.getBytes("UTF-8"))
 
-  /** Generation dirs of a layout table, oldest→newest: generation 0 is
-    * the base [[materialize]] build at `<table>`, MERGE applies append
-    * `<table>_vN`. Pure directory listing — no Spark job.
-    */
-  private[graft] def listGenerations(s: SparkSession, corpusDir: String,
-                                     table: String): Seq[(Int, String)] =
-    layoutRoot(s, corpusDir).toSeq.flatMap { base =>
-      val root = java.nio.file.Paths.get(base)
-      if (!java.nio.file.Files.isDirectory(root)) Seq.empty
-      else {
-        val kids = java.nio.file.Files.list(root)
-        val prefix = s"${table}_v"
-        try {
-          import scala.jdk.CollectionConverters._
-          kids.iterator().asScala.map(_.getFileName.toString).collect {
-            case n if n == table => 0 -> s"$base/$n"
-            case n if n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
-              n.drop(prefix.length).forall(_.isDigit) =>
-              n.drop(prefix.length).toInt -> s"$base/$n"
-          }.toVector.sortBy(_._1)
-        } finally kids.close()
-      }
-    }
-
   /** Re-attach the newest complete generation as the served catalog
     * table when the registration is missing (fresh JVM, or a swing
     * interrupted between DROP and RENAME). Returns the attached path;
@@ -235,9 +211,10 @@ object CorpusLayout {
                     table: String): Option[String] = {
     val t = tableName(table, corpusDir)
     if (!keyed.contains(table) || s.catalog.tableExists(t)) None
-    else listGenerations(s, corpusDir, table).reverse.find { case (_, p) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS")) &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(p, BucketsMarker))
+    else {
+      val chain = GenerationChain.Chain(corpusDir, table, partitioned = false)
+      GenerationChain.generations(s, chain).reverse
+        .find { case (_, p) => GenerationChain.complete(chain, p) }
     }.map { case (_, path) =>
       val buckets = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path, BucketsMarker)), "UTF-8").trim.toInt
@@ -458,40 +435,6 @@ object CorpusLayout {
         case (d, _) => d
       }
     }
-
-  /** Cross-writer catalog resync: point this SESSION's catalog entry at
-    * the newest complete generation on disk. The swing verbs update the
-    * catalog of the session that RAN them; a concurrent writer in
-    * another JVM advances the chain on disk while this JVM's catalog
-    * still names an older generation dir — and an apply planned against
-    * that stale frame would silently drop the other writer's edits (the
-    * classic lost update). Every chain-mutating verb calls this first,
-    * INSIDE the [[graft.operators.GenerationLease]], so the merge target
-    * is the chain tip by construction. Returns the re-attached path when
-    * a resync happened; None when the catalog already agreed with disk.
-    */
-  def resyncServing(s: SparkSession, corpusDir: String,
-                    table: String): Option[String] = {
-    if (!keyed.contains(table)) return None
-    val t = tableName(table, corpusDir)
-    if (!s.catalog.tableExists(t)) return repairServing(s, corpusDir, table)
-    val newest = listGenerations(s, corpusDir, table).reverse.find { case (_, p) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS")) &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(p, BucketsMarker))
-    }.map(_._2)
-    newest.flatMap { np =>
-      val loc = s.sql(s"DESCRIBE FORMATTED $t")
-        .filter(col("col_name") === "Location")
-        .collect().headOption.map(_.getString(1).stripPrefix("file:"))
-      val npN = java.nio.file.Paths.get(np).normalize.toString
-      if (loc.exists(l =>
-          java.nio.file.Paths.get(l).normalize.toString == npN)) None
-      else {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        repairServing(s, corpusDir, table)
-      }
-    }
-  }
 
   /** The composed logical plan a `graft_cl_` catalog NAME must serve
     * when its generation carries a dv sidecar or a column mapping —

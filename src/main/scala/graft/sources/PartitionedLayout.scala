@@ -41,9 +41,11 @@ import org.apache.spark.sql.functions._
   * tip folds the sidecars away with a full rewrite
   * ([[graft.operators.MergeOps]]'s rule, one tier up).
   *
-  * DROP/RENAME column mapping composes here too (round 15): a
-  * `_MAPPING` marker makes [[renameColumn]]/[[dropColumn]] METADATA-ONLY
-  * swings (every byte hard-links, partition dirs and sidecars alike);
+  * Column mapping composes here too (round 15): a `_MAPPING` marker
+  * makes [[GenerationChain.renameColumn]] / [[GenerationChain.dropColumn]]
+  * METADATA-ONLY swings (every byte hard-links, partition dirs and
+  * sidecars alike), and [[GenerationChain.addColumns]] adds only a
+  * footer-only schema anchor in the first partition dir;
   * the serving read projects physical→logical AFTER the dv fold,
   * changesets speak logical names and translate back at the swing, and
   * a full rewrite REBASES (logical names become physical truth, marker
@@ -63,10 +65,11 @@ import org.apache.spark.sql.functions._
   * the mapping. The spec must not name the partition column (constant
   * within every directory already).
   *
-  * Still scoped out, stated not hidden: ADD COLUMNS stays flat-only
-  * (the schema-anchor path — fold flat first). The generation chain,
-  * single-writer lease, commit-time stamps and changeset validation
-  * mirror [[graft.operators.MergeOps]].
+  * The chain's metadata verbs — column mapping, tags, VACUUM, the
+  * change feed, the serving resync and DESCRIBE HISTORY — exist once
+  * for both layouts in [[GenerationChain]]; the apply's single-writer
+  * lease, commit-time stamps and changeset validation mirror
+  * [[graft.operators.MergeOps]].
   *
   * Partition values must be STRINGS that survive a directory name
   * verbatim (`[A-Za-z0-9._-]+`): Spark escapes anything else in the
@@ -85,37 +88,18 @@ object PartitionedLayout {
 
   private val SafeValue = "[A-Za-z0-9._-]+".r
 
-  private def root(s: SparkSession, corpusDir: String): String =
-    CorpusLayout.layoutRoot(s, corpusDir)
-      .map(_ + "/partitioned")
-      .getOrElse(throw new IllegalStateException(
-        s"${CorpusLayout.ConfKey} is not set on this session — nowhere " +
-          "to materialize a partitioned layout"))
-
   /** Generation dirs, oldest→newest (same chain shape as the flat
     * layout, rooted under `partitioned/`). Pure directory listing.
     */
   def generations(s: SparkSession, corpusDir: String,
-                  table: String): Seq[(Int, String)] = {
-    val base = java.nio.file.Paths.get(root(s, corpusDir))
-    if (!java.nio.file.Files.isDirectory(base)) Seq.empty
-    else {
-      val kids = java.nio.file.Files.list(base)
-      val prefix = s"${table}_v"
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala.map(_.getFileName.toString).collect {
-          case n if n == table => 0 -> s"$base/$n"
-          case n if n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
-            n.drop(prefix.length).forall(_.isDigit) =>
-            n.drop(prefix.length).toInt -> s"$base/$n"
-        }.toVector.sortBy(_._1)
-      } finally kids.close()
-    }
-  }
+                  table: String): Seq[(Int, String)] =
+    GenerationChain.generations(s, chain(corpusDir, table))
+
+  private def chain(corpusDir: String, table: String): GenerationChain.Chain =
+    GenerationChain.Chain(corpusDir, table, partitioned = true)
 
   /** (partition value, dir path) of a generation's partition dirs. */
-  private def partDirs(gen: String): Seq[(String, java.nio.file.Path)] = {
+  private[graft] def partDirs(gen: String): Seq[(String, java.nio.file.Path)] = {
     val base = java.nio.file.Paths.get(gen)
     if (!java.nio.file.Files.isDirectory(base)) Seq.empty
     else {
@@ -137,7 +121,7 @@ object PartitionedLayout {
       java.nio.file.Files.isDirectory(
         p.resolve(CorpusLayout.DvDir).resolve("tombstones")) }
 
-  private def readPcol(loc: String): String =
+  private[graft] def readPcol(loc: String): String =
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(loc, PcolMarker)), "UTF-8").trim
 
@@ -261,7 +245,7 @@ object PartitionedLayout {
         org.apache.spark.sql.types.StringType,
       s"partition column '$pcol' must be STRING (directory-name values)")
     checkValues(src, pcol)
-    val base = root(s, corpusDir)
+    val base = GenerationChain.rootDir(s, chain(corpusDir, table))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
     // the reverse map (catalog name → corpus) reads the layout root's
     // `_CORPUS` marker — the flat materialize writes it too; identical
@@ -288,7 +272,7 @@ object PartitionedLayout {
     CorpusLayout.writeBucketsMarker(path, buckets)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(path, PcolMarker), pcol.getBytes("UTF-8"))
-    CorpusLayout.bumpEpoch(s, corpusDir, s"${table}_partitioned", path)
+    CorpusLayout.bumpEpoch(s, corpusDir, chain(corpusDir, table).key, path)
     t
   }
 
@@ -382,9 +366,9 @@ object PartitionedLayout {
     require(s.catalog.tableExists(t),
       s"no partitioned layout for ($corpusDir, $table) — run " +
         "PartitionedLayout.materialize first")
-    graft.operators.GenerationLease.withLease(
-        s, corpusDir, s"$table@partitioned") {
-      resync(s, corpusDir, table)
+    val ch = chain(corpusDir, table)
+    graft.operators.GenerationLease.withLease(s, corpusDir, ch.key) {
+      GenerationChain.resync(s, ch)
       val (curLoc, buckets) = graft.operators.MergeOps.tableLayout(s, t)
       val pcol = readPcol(curLoc)
       // the served view COMPOSES the tip's sidecars and column mapping:
@@ -551,33 +535,23 @@ object PartitionedLayout {
       // corpus semi-join + checkpoint)
       lazy val oldHomes = probe.filter(col(oldP).isNotNull)
         .select(col(key), col(oldP).as(pcol))
-      val gens = generations(s, corpusDir, table)
-      val vpath = s"${root(s, corpusDir)}/${table}_v${gens.map(_._1).max + 1}"
+      val vpath = GenerationChain.nextGeneration(s, ch)
       val staging = s"${t}_staging"
       // staging-create for paths whose files already exist on disk
       // (no-op link-forward and the MOR swing — no Spark write job).
       // The catalog schema is PHYSICAL: files keep their own column
       // names under a mapping, and the serving read projects logical.
-      // SORTED BY states what the linked files honor (z-clustered files
-      // sort by `_zv`, never the key) — read AFTER the marker carry.
-      def stagingOverFiles(): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $staging")
-        val sortCol = CorpusLayout.sortColFor(vpath).getOrElse(key)
-        val ddl = org.apache.spark.sql.types.StructType(
-          physSchema.filterNot(_.name == pcol)).toDDL
-        s.sql(s"CREATE TABLE $staging (${ddl}, $pcol STRING) " +
-          s"USING PARQUET PARTITIONED BY ($pcol) " +
-          s"CLUSTERED BY ($key) SORTED BY ($sortCol) INTO $buckets BUCKETS " +
-          s"LOCATION '$vpath'")
-      }
+      // Called AFTER the cluster-marker carry (SORTED BY reads it).
+      def stagingOverFiles(): Unit =
+        GenerationChain.stageOverFiles(s, t, key, vpath, buckets,
+          org.apache.spark.sql.types.StructType(
+            physSchema.filterNot(_.name == pcol)), Some(pcol))
       if (touched.isEmpty) {
         // no-op changeset (empty, or tombstones for absent keys):
         // link the whole generation forward — sidecars too, verbatim —
         // the chain still advances so the apply is externally
         // observable (epoch, commit stamp)
-        linkUntouched(curLoc, vpath, Set.empty)
-        linkSidecars(curLoc, vpath, skip = Set.empty)
-        carryClusterMarker(curLoc, vpath)
+        GenerationChain.linkForward(curLoc, vpath, partitioned = true, withDv = true)
         if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
         stagingOverFiles()
       } else if (morMode) {
@@ -589,10 +563,9 @@ object PartitionedLayout {
         // partition, so its tombstone goes to the OLD home and its new
         // version to the NEW home's deltas — a cross-partition move is
         // one eviction + one upsert, two sidecar-sized writes)
-        linkUntouched(curLoc, vpath, Set.empty)
+        GenerationChain.linkForward(curLoc, vpath, partitioned = true, withDv = false)
         val touchedParts = touched.map(_._1)
         linkSidecars(curLoc, vpath, skip = touchedParts)
-        carryClusterMarker(curLoc, vpath)
         if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
         // the sidecar lives in PHYSICAL space (it composes BEFORE the
         // mapping projection on read) — the logical-named changeset
@@ -762,358 +735,8 @@ object PartitionedLayout {
       if (graft.operators.MergeOps.changeFeedOn(s))
         graft.operators.MergeOps.writeChangeFeedSlice(
           s, served, changes, key, vpath)
-      swingTo(s, corpusDir, table, vpath, buckets, pcol)
+      GenerationChain.swing(s, ch, curLoc, vpath, buckets, Some(pcol))
       vpath
-    }
-  }
-
-  /** The change data feed across partitioned generations `(fromGen,
-    * toGen]` — [[graft.operators.MergeOps.changeFeed]]'s contract over
-    * this chain: per-generation `_cdf` slices at delta cost, a
-    * row-changing apply without one fails loudly, link-forward
-    * generations (no-op applies, metadata swings) contribute empty.
-    * SQL spelling: `SELECT * FROM graft_changes('<graft_plt_…>', from)`.
-    */
-  def changeFeed(s: SparkSession, corpusDir: String,
-                 table: String = "documents",
-                 fromGen: Int, toGen: Int = -1): DataFrame = {
-    import graft.operators.MergeOps
-    val gens = generations(s, corpusDir, table).toMap
-    val top = if (toGen < 0) gens.keys.max else toGen
-    require(fromGen >= 0 && fromGen < top,
-      s"changeFeed needs 0 <= fromGen < toGen, got ($fromGen, $top)")
-    // data-file names (partition subdirs + per-partition dv sidecars,
-    // never the _cdf slices themselves): a generation whose previous
-    // names all ride forward changed no rows — the conservative
-    // row-preserving test, one tier down
-    def dataNames(d: String): Set[String] = {
-      val base = java.nio.file.Paths.get(d)
-      val walk = java.nio.file.Files.walk(base)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(f => java.nio.file.Files.isRegularFile(f) &&
-            f.getFileName.toString.endsWith(".parquet"))
-          .map(base.relativize(_).toString)
-          .filterNot(_.startsWith(MergeOps.CdfDir + "/"))
-          .toSet
-      } finally walk.close()
-    }
-    (fromGen + 1 to top).flatMap { g =>
-      val p = gens.getOrElse(g, throw new IllegalArgumentException(
-        s"generation $g of ($corpusDir, $table) is not retained — " +
-          s"have ${gens.keys.toSeq.sorted.mkString(", ")}"))
-      val cdf = java.nio.file.Paths.get(p, MergeOps.CdfDir)
-      val files = Option(cdf.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      if (java.nio.file.Files.isDirectory(cdf) && files.isEmpty) None
-      else if (!java.nio.file.Files.isDirectory(cdf)) {
-        val preserved = gens.get(g - 1).exists { prev =>
-          val pn = dataNames(prev)
-          pn.nonEmpty && pn.subsetOf(dataNames(p))
-        }
-        if (preserved) None
-        else throw new IllegalStateException(
-          s"generation $g ($p) carries no change-feed sidecar — enable " +
-            s"${MergeOps.ChangeFeedKey} before applying")
-      } else Some(
-        s.read.option("mergeSchema", "true").parquet(cdf.toString)
-          .drop(MergeOps.SchemaFpCol)
-          .withColumn(MergeOps.CommitGenCol, lit(g)))
-    }.reduceLeftOption((a, b) =>
-        a.unionByName(b, allowMissingColumns = true))
-      .getOrElse {
-        val tgt = ifPresent(s, corpusDir, table)
-          .getOrElse(throw new IllegalStateException(
-            s"no partitioned layout for ($corpusDir, $table)"))
-        tgt.limit(0)
-          .withColumn(MergeOps.ChangeTypeCol, lit(null).cast("string"))
-          .withColumn(MergeOps.CommitGenCol, lit(null).cast("int"))
-      }
-  }
-
-  /** Rename a logical column — a metadata-only generation over the
-    * partition dirs (every byte hard-links, data files and sidecars
-    * alike; only the `_MAPPING` marker changes). The flat
-    * [[graft.operators.MergeOps.renameColumn]] discipline, one
-    * dimension over: neither the layout key (row identity, bucket
-    * placement) nor the PARTITION column (it names directories — a
-    * rename would orphan every `pcol=value/` path) can move.
-    */
-  def renameColumn(s: SparkSession, corpusDir: String, table: String,
-                   from: String, to: String): String = {
-    require(to.nonEmpty && !to.startsWith("_"),
-      s"invalid target column name '$to'")
-    metadataSwing(s, corpusDir, table) { (m, logical, keyCol, pcol, _) =>
-      require(from != keyCol, s"cannot rename the layout key '$keyCol'")
-      require(from != pcol,
-        s"cannot rename the partition column '$pcol' — it names the " +
-          "layout's directories")
-      require(logical.contains(from),
-        s"no column '$from' — logical columns are ${logical.mkString(", ")}")
-      require(!logical.contains(to), s"column '$to' already exists")
-      val p = m.collectFirst { case (ph, Some(l)) if l == from => ph }
-        .getOrElse(from)
-      if (p == to) m - p else m + (p -> Some(to))
-    }
-  }
-
-  /** Drop a logical column — metadata-only: linked files keep the
-    * bytes, the serving projection omits them, and new rows fill the
-    * physical slot with NULL. Key and partition column refuse.
-    */
-  def dropColumn(s: SparkSession, corpusDir: String, table: String,
-                 column: String): String =
-    metadataSwing(s, corpusDir, table) { (m, logical, keyCol, pcol, _) =>
-      require(column != keyCol, s"cannot drop the layout key '$keyCol'")
-      require(column != pcol,
-        s"cannot drop the partition column '$pcol' — it names the " +
-          "layout's directories")
-      require(logical.contains(column),
-        s"no column '$column' — logical columns are ${logical.mkString(", ")}")
-      val p = m.collectFirst { case (ph, Some(l)) if l == column => ph }
-        .getOrElse(column)
-      m + (p -> None)
-    }
-
-  /** ADD COLUMNS as a metadata-only generation — the flat
-    * [[graft.operators.MergeOps.addColumns]] recipe over partition
-    * dirs: every existing byte hard-links, and the only new bytes are
-    * ONE zero-row "schema anchor" parquet file (bucket-0 named, footer
-    * only) in the first partition dir carrying the widened PHYSICAL
-    * schema. [[repairServing]] and [[readGeneration]] read with
-    * mergeSchema, so the anchor is the durable record of the ADD;
-    * untouched rows read the new columns as NULL (parquet NULL-fills a
-    * requested column a file lacks). Names must collide with no
-    * logical OR physical column (a dropped slot must not be shadowed),
-    * and never the partition column.
-    */
-  def addColumns(s: SparkSession, corpusDir: String, table: String,
-                 cols: Seq[(String, org.apache.spark.sql.types.DataType)]): String = {
-    require(cols.nonEmpty, "addColumns needs at least one column")
-    require(cols.map(_._1).distinct.size == cols.size,
-      "duplicate column in ADD COLUMNS")
-    cols.foreach { case (n, _) =>
-      require(n.nonEmpty && !n.startsWith("_"), s"invalid column name '$n'") }
-    metadataSwing(s, corpusDir, table, widen = cols) {
-      (m, logical, _, pcol, physSchema) =>
-        val taken = (logical ++ physSchema.fieldNames :+ pcol).toSet
-        cols.foreach { case (n, _) =>
-          require(!taken.contains(n), s"column '$n' already exists") }
-        m
-    }
-  }
-
-  /** The shared metadata-only swing: link the whole generation forward
-    * (partition dirs + sidecars), write the updated `_MAPPING` (and,
-    * when widening, the schema-anchor file), re-point the catalog.
-    * `update` receives (current mapping, logical column names, key,
-    * pcol, physical schema) and returns the new mapping.
-    */
-  private def metadataSwing(s: SparkSession, corpusDir: String,
-                            table: String,
-                            widen: Seq[(String, org.apache.spark.sql.types.DataType)] = Seq.empty)
-      (update: (Map[String, Option[String]], Seq[String], String, String,
-        org.apache.spark.sql.types.StructType) => Map[String, Option[String]]): String = {
-    val key = CorpusLayout.keyed(table)
-    val t = tableName(table, corpusDir)
-    require(s.catalog.tableExists(t),
-      s"no partitioned layout for ($corpusDir, $table) — run " +
-        "PartitionedLayout.materialize first")
-    graft.operators.GenerationLease.withLease(
-        s, corpusDir, s"$table@partitioned") {
-      resync(s, corpusDir, table)
-      val (curLoc, buckets) = graft.operators.MergeOps.tableLayout(s, t)
-      val pcol = readPcol(curLoc)
-      val physSchema = CorpusLayout.physicalSchema(s, t)
-      val m0 = CorpusLayout.readMapping(curLoc)
-      val logical = physSchema.fieldNames.toSeq.flatMap(p => m0.get(p) match {
-        case None => Some(p)
-        case Some(Some(l)) => Some(l)
-        case Some(None) => None
-      })
-      val newMapping = update(m0, logical, key, pcol, physSchema)
-      val gens = generations(s, corpusDir, table)
-      val vpath = s"${root(s, corpusDir)}/${table}_v${gens.map(_._1).max + 1}"
-      linkUntouched(curLoc, vpath, Set.empty)
-      linkSidecars(curLoc, vpath, skip = Set.empty)
-      carryClusterMarker(curLoc, vpath)
-      if (newMapping.nonEmpty) CorpusLayout.writeMapping(vpath, newMapping)
-      // widen: the anchor lands bucket-0-named in the FIRST partition
-      // dir (zero rows satisfy every pair invariant trivially); the
-      // physical schema here excludes pcol — directory-named, never a
-      // file column
-      val widened = org.apache.spark.sql.types.StructType(
-        physSchema.filterNot(_.name == pcol) ++
-          widen.map { case (n, dt) =>
-            org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
-      if (widen.nonEmpty) {
-        val firstPart = partDirs(vpath).headOption.getOrElse(
-          throw new IllegalStateException(
-            s"no partition dirs under $vpath to anchor the ADD"))._2
-        writeSchemaAnchor(s, firstPart.toString, widened)
-      }
-      val staging = s"${t}_staging"
-      s.sql(s"DROP TABLE IF EXISTS $staging")
-      val sortCol = CorpusLayout.sortColFor(vpath).getOrElse(key)
-      val ddl = widened.toDDL
-      s.sql(s"CREATE TABLE $staging (${ddl}, $pcol STRING) " +
-        s"USING PARQUET PARTITIONED BY ($pcol) " +
-        s"CLUSTERED BY ($key) SORTED BY ($sortCol) INTO $buckets BUCKETS " +
-        s"LOCATION '$vpath'")
-      swingTo(s, corpusDir, table, vpath, buckets, pcol)
-      vpath
-    }
-  }
-
-  /** Write the zero-row schema-anchor parquet for [[addColumns]] into a
-    * partition dir, named as a bucket-0 file so bucket discipline holds.
-    */
-  private def writeSchemaAnchor(s: SparkSession, dir: String,
-                                schema: org.apache.spark.sql.types.StructType): Unit = {
-    val stage = java.nio.file.Paths.get(dir, "_anchor_stage")
-    s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .repartition(1).write.parquet(stage.toString)
-    val src = Option(stage.toFile.listFiles())
-      .flatMap(_.find(f => f.isFile && f.getName.endsWith(".parquet")))
-      .map(_.toPath)
-      .getOrElse(throw new IllegalStateException(
-        "empty-frame write produced no schema-anchor file"))
-    val n = src.getFileName.toString
-    val bucketed = if (n.contains(".c000")) n.replace(".c000", "_00000.c000")
-      else n.stripSuffix(".parquet") + "_00000.parquet"
-    java.nio.file.Files.move(src, java.nio.file.Paths.get(dir, bucketed))
-    graft.FsUtil.deleteRecursively(stage)
-  }
-
-  /** Serve the filesystem's newest complete generation before deriving
-    * anything from the catalog — another writer may have advanced the
-    * chain since this session last looked (or a fresh JVM never looked).
-    */
-  private def resync(s: SparkSession, corpusDir: String,
-                     table: String): Unit = {
-    val t = tableName(table, corpusDir)
-    if (!s.catalog.tableExists(t)) { repairServing(s, corpusDir, table); () }
-    else {
-      val newest = generations(s, corpusDir, table).lastOption.map(_._2)
-      val (curLoc0, _) = graft.operators.MergeOps.tableLayout(s, t)
-      if (newest.exists(n => java.nio.file.Paths.get(n).normalize !=
-          java.nio.file.Paths.get(curLoc0).normalize)) {
-        drop(s, corpusDir, table)
-        repairServing(s, corpusDir, table)
-      }
-    }
-  }
-
-  /** Markers + catalog swing + partition registration + epoch bump — the
-    * shared tail of every chain-advancing verb. The staging table
-    * registered only the partitions a write produced; the hard-linked
-    * dirs join the catalog's partition list here.
-    */
-  private def swingTo(s: SparkSession, corpusDir: String, table: String,
-                      vpath: String, buckets: Int, pcol: String): Unit = {
-    val t = tableName(table, corpusDir)
-    CorpusLayout.writeBucketsMarker(vpath, buckets)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(vpath, PcolMarker), pcol.getBytes("UTF-8"))
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    registerPartitions(s, t, vpath, pcol)
-    CorpusLayout.refreshRelationCache(s, t)
-    CorpusLayout.bumpEpoch(s, corpusDir, s"${table}_partitioned", vpath)
-  }
-
-  /** Register a generation's partition dirs on a freshly attached table.
-    * This used to be `ALTER TABLE … RECOVER PARTITIONS`, whose
-    * RepairTableCommand walks EVERY FILE under the table root to infer
-    * the partition list (at 100 TB a full-tree listing per statement;
-    * locally a ~50–60 ms Spark-side walk per swing plus the skipped-
-    * marker log spam the r15 driver tail recorded). The driver already
-    * knows the partition dirs — one directory listing of the generation
-    * root — so ADD PARTITION registers them as pure catalog metadata,
-    * zero file walking (optimization r16, guide §5/§6). Values are
-    * directory-safe by the layout's contract ([A-Za-z0-9._-]+), so
-    * quoting them into DDL needs no escaping; IF NOT EXISTS because the
-    * staging write already registered the partitions it wrote, at the
-    * same locations.
-    */
-  private def registerPartitions(s: SparkSession, t: String, vpath: String,
-                                 pcol: String): Unit = {
-    val parts = partDirs(vpath)
-    if (parts.nonEmpty) {
-      val specs = parts.map { case (v, p) =>
-        s"PARTITION ($pcol='$v') LOCATION '$p'" }.mkString(" ")
-      s.sql(s"ALTER TABLE $t ADD IF NOT EXISTS $specs")
-    }
-  }
-
-  /** The tag namespace key: partitioned chains share the flat tag
-    * store under a distinct table key, so `documents` flat tags and
-    * `documents@partitioned` tags can never collide.
-    */
-  private def tagKey(table: String): String = s"$table@partitioned"
-
-  /** Tag a retained generation (default: the served one) with `name` —
-    * [[graft.operators.MergeOps.tagGeneration]]'s contract over the
-    * partitioned chain: an existing tag refuses loudly (retagging is
-    * drop + create), tagged generations survive [[vacuum]], and
-    * `VERSION AS OF '<name>'` reads them.
-    */
-  def tagGeneration(s: SparkSession, corpusDir: String,
-                    table: String = "documents",
-                    name: String, generation: Int = -1): String =
-    graft.operators.GenerationLease.withLease(
-        s, corpusDir, tagKey(table)) {
-      resync(s, corpusDir, table)
-      val gens = generations(s, corpusDir, table)
-      val g = if (generation < 0) gens.last._1 else generation
-      val p = gens.toMap.getOrElse(g, throw new IllegalArgumentException(
-        s"generation $g of ($corpusDir, $table) is not retained — " +
-          s"have ${gens.map(_._1).mkString(", ")}"))
-      val f = graft.operators.MergeOps.tagFile(s, corpusDir, tagKey(table), name)
-      java.nio.file.Files.createDirectories(f.getParent)
-      require(!java.nio.file.Files.exists(f),
-        s"tag '$name' already exists for ${tagKey(table)} (generation " +
-          s"${tags(s, corpusDir, table).getOrElse(name, -1)}) — dropTag first")
-      java.nio.file.Files.write(f, s"$g\t$p".getBytes("UTF-8"))
-      p
-    }
-
-  /** Drop a tag; the pinned bytes reclaim at the next [[vacuum]]. */
-  def dropTag(s: SparkSession, corpusDir: String,
-              table: String = "documents", name: String): Boolean =
-    graft.operators.MergeOps.dropTag(s, corpusDir, tagKey(table), name)
-
-  /** Retained tags of the partitioned chain: name → generation. */
-  def tags(s: SparkSession, corpusDir: String,
-           table: String = "documents"): Map[String, Int] =
-    graft.operators.MergeOps.tags(s, corpusDir, tagKey(table))
-
-  /** Reclaim drained generations: delete all but the newest `keepLast`,
-    * never the served one and never a tagged one — the flat vacuum's
-    * lease + resync + pin discipline, one tier down.
-    */
-  def vacuum(s: SparkSession, corpusDir: String,
-             table: String = "documents", keepLast: Int = 2): Seq[String] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    graft.operators.GenerationLease.withLease(
-        s, corpusDir, s"$table@partitioned") {
-      resync(s, corpusDir, table)
-      val t = tableName(table, corpusDir)
-      require(s.catalog.tableExists(t),
-        s"no partitioned layout for ($corpusDir, $table)")
-      val served = graft.operators.MergeOps.tableLayout(s, t)._1
-      val servedNorm = java.nio.file.Paths.get(served).normalize.toString
-      val pinned = graft.operators.MergeOps.tagPins(s, corpusDir, tagKey(table))
-      generations(s, corpusDir, table).dropRight(keepLast)
-        .filterNot { case (_, p) =>
-          val norm = java.nio.file.Paths.get(p).normalize.toString
-          norm == servedNorm || pinned.contains(norm) }
-        .map { case (_, p) =>
-          graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p))
-          p
-        }
     }
   }
 
@@ -1126,17 +749,16 @@ object PartitionedLayout {
   def compact(s: SparkSession, corpusDir: String,
               table: String = "documents"): String = {
     val key = CorpusLayout.keyed(table)
-    graft.operators.GenerationLease.withLease(
-        s, corpusDir, s"$table@partitioned") {
-      resync(s, corpusDir, table)
+    val ch = chain(corpusDir, table)
+    graft.operators.GenerationLease.withLease(s, corpusDir, ch.key) {
+      GenerationChain.resync(s, ch)
       val t = tableName(table, corpusDir)
       require(s.catalog.tableExists(t),
         s"no partitioned layout for ($corpusDir, $table)")
       val (curLoc, buckets) = graft.operators.MergeOps.tableLayout(s, t)
       val pcol = readPcol(curLoc)
       val composed = composedFrame(s, t, curLoc, pcol, key)
-      val gens = generations(s, corpusDir, table)
-      val vpath = s"${root(s, corpusDir)}/${table}_v${gens.map(_._1).max + 1}"
+      val vpath = GenerationChain.nextGeneration(s, ch)
       // a rebase: the composed LOGICAL view becomes the physical truth,
       // the mapping clears, and a cluster spec translates its columns
       // through the mapping (recomputed `_zv`, fresh tight boxes)
@@ -1145,7 +767,7 @@ object PartitionedLayout {
           CorpusLayout.readMapping(curLoc)))
       clusteredWrite(s, composed, spec, buckets, key, pcol, vpath,
         s"${t}_staging", carryMapping = Map.empty)
-      swingTo(s, corpusDir, table, vpath, buckets, pcol)
+      GenerationChain.swing(s, ch, curLoc, vpath, buckets, Some(pcol))
       vpath
     }
   }
@@ -1248,19 +870,6 @@ object PartitionedLayout {
         else issues.mkString("; "))
     }
     out.toSeq
-  }
-
-  /** Carry the `_CLUSTER` marker across a generation that links its
-    * files forward (no-op, MOR and metadata swings) — the linked files
-    * still honor the spec's `_zv` sort.
-    */
-  private def carryClusterMarker(curLoc: String, vpath: String): Unit = {
-    val cl = java.nio.file.Paths.get(curLoc, CorpusLayout.ClusterMarker)
-    if (java.nio.file.Files.exists(cl)) {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(vpath))
-      java.nio.file.Files.copy(cl,
-        java.nio.file.Paths.get(vpath, CorpusLayout.ClusterMarker))
-    }
   }
 
   /** Hard-link every data file of `curLoc`'s partition subdirs whose
@@ -1403,10 +1012,7 @@ object PartitionedLayout {
     val t = tableName(table, corpusDir)
     if (s.catalog.tableExists(t)) return None
     generations(s, corpusDir, table).reverse.collectFirst {
-      case (_, p) if java.nio.file.Files.exists(
-          java.nio.file.Paths.get(p, CorpusLayout.BucketsMarker)) &&
-        java.nio.file.Files.exists(
-          java.nio.file.Paths.get(p, PcolMarker)) => p
+      case (_, p) if GenerationChain.complete(chain(corpusDir, table), p) => p
     }.map { p =>
       val buckets = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(p, CorpusLayout.BucketsMarker)), "UTF-8")
@@ -1424,7 +1030,7 @@ object PartitionedLayout {
         s"PARTITIONED BY ($pcol) " +
         s"CLUSTERED BY ($key) SORTED BY ($sortCol) INTO $buckets BUCKETS " +
         s"LOCATION '$p'")
-      registerPartitions(s, t, p, pcol)
+      GenerationChain.registerPartitions(s, t, p, pcol)
       p
     }
   }

@@ -107,7 +107,7 @@ object CrashRecoveryMain {
     if (mode == "contend-merge") {
       // one of two concurrent writers: apply this writer's wave slice of
       // 0..5 against the SHARED chain (repairServing re-attaches from
-      // disk; the generation lease serializes the swings; resyncServing
+      // disk; the generation lease serializes the swings; the chain resync
       // re-reads the other writer's tip before each merge)
       for (w <- startWave until 6 by 2)
         StreamingMerge.applyBatch(contendWave(spark, corpusDir, w),

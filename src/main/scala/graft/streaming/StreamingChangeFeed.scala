@@ -30,9 +30,10 @@ import org.apache.spark.sql.functions._
   * generation dir, so retain (or tag) at least the consumer's horizon.
   *
   * Requires [[MergeOps.ChangeFeedKey]] on for the applies being
-  * consumed — [[MergeOps.changeFeed]]'s gapped-feed contract holds for
-  * the batch verb; the stream simply never sees a slice that was never
-  * written, so enable the feed BEFORE attaching consumers.
+  * consumed — [[graft.sources.GenerationChain.changeFeed]]'s
+  * gapped-feed contract holds for the batch verb; the stream simply
+  * never sees a slice that was never written, so enable the feed BEFORE
+  * attaching consumers.
   */
 object StreamingChangeFeed {
 

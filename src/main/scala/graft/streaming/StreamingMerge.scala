@@ -32,7 +32,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * corpus; the stream never holds state (the corpus IS the state), so
   * there is no watermark, no state store, and nothing for a restart to
   * lose beyond the ledger on disk. Generations accrete per batch;
-  * reclaim drained ones with [[MergeOps.vacuum]] (linked bytes survive).
+  * reclaim drained ones with [[graft.sources.GenerationChain.vacuum]]
+  * (linked bytes survive).
   */
 object StreamingMerge {
 
@@ -95,7 +96,9 @@ object StreamingMerge {
       if (compactEvery > 0 &&
           appliedBatches(s, corpusDir, table).size % compactEvery == 0) {
         MergeOps.compactGenerations(s, corpusDir, table)
-        MergeOps.vacuum(s, corpusDir, table, keepLast)
+        graft.sources.GenerationChain.vacuum(s,
+          graft.sources.GenerationChain.Chain(corpusDir, table, partitioned = false),
+          keepLast)
       } else if (maxGenerations > 0)
         MergeOps.maybeCompact(s, corpusDir, table, maxGenerations, keepLast)
       true

@@ -525,7 +525,7 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
       graft.sources.CorpusLayout.materialize(spark, sf, tables = Seq("documents"))
       // two real JVMs, CONCURRENT: even waves vs odd waves of disjoint
       // key slices — only the generation lease keeps their resolve→
-      // stage→link→swing sections apart; resyncServing makes each see
+      // stage→link→swing sections apart; the chain resync makes each see
       // the other's tip before every merge
       val (pa, la) = forkAsync("contend-merge", sf, layoutBase,
         tmp.toString + "/dumpA", "0")
@@ -541,7 +541,8 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
       assert(pa.exitValue() == 0, s"writer A failed; log tail:\n${tail(la)}")
       assert(pb.exitValue() == 0, s"writer B failed; log tail:\n${tail(lb)}")
 
-      graft.sources.CorpusLayout.resyncServing(spark, sf, "documents")
+      graft.sources.GenerationChain.resync(spark,
+        graft.sources.GenerationChain.Chain(sf, "documents", partitioned = false))
       val served = graft.sources.CorpusLayout.ifPresent(spark, sf, "documents").get
       val docs = spark.read.parquet(s"$sf/documents.parquet")
       // no lost update: every wave's slice edited (each apply merged the

@@ -2,6 +2,8 @@ package graft
 
 import graft.operators.MergeOps
 import graft.sources.CorpusLayout
+import graft.sources.GenerationChain
+import graft.sources.GenerationChain.Chain
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -216,8 +218,9 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       val vpath2 = MergeOps.applyToLayout(spark, sf, changes2)
       assert(MergeOps.generations(spark, sf, "documents").map(_._1) == Seq(0, 1, 2))
       intercept[IllegalArgumentException](
-        MergeOps.vacuum(spark, sf, "documents", keepLast = 0))
-      val reclaimed = MergeOps.vacuum(spark, sf, "documents", keepLast = 1)
+        GenerationChain.vacuum(spark, Chain(sf, "documents", partitioned = false), keepLast = 0))
+      val reclaimed = GenerationChain.vacuum(spark,
+        Chain(sf, "documents", partitioned = false), keepLast = 1)
       assert(reclaimed.map(p => Paths.get(p).getFileName.toString).sorted ==
         Seq("documents", "documents_v1"), s"vacuum deleted $reclaimed")
       assert(MergeOps.generations(spark, sf, "documents") == Seq(2 -> vpath2))
@@ -325,7 +328,8 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       val (k2, _) = MergeOps.snapshot(spark, sf)
       assert(k1 == 1 && k2 == 2 && MergeOps.snapshots(spark, sf) == Seq(1, 2))
       // keepLast=1 would reclaim gen0+v1, but snapshot 1 pins gen0
-      val reclaimed = MergeOps.vacuum(spark, sf, "documents", keepLast = 1)
+      val reclaimed = GenerationChain.vacuum(spark,
+        Chain(sf, "documents", partitioned = false), keepLast = 1)
       assert(reclaimed.map(p => java.nio.file.Paths.get(p).getFileName.toString)
         == Seq("documents_v1"), s"vacuum ignored the snapshot pin: $reclaimed")
       // the pinned pair is still exactly the corpus the run saw
@@ -335,7 +339,8 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(snap1("embeddings").count() > 0)
       // unpin → the generation becomes vacuum-eligible
       MergeOps.dropSnapshot(spark, sf, k1)
-      val reclaimed2 = MergeOps.vacuum(spark, sf, "documents", keepLast = 1)
+      val reclaimed2 = GenerationChain.vacuum(spark,
+        Chain(sf, "documents", partitioned = false), keepLast = 1)
       assert(reclaimed2.map(p => java.nio.file.Paths.get(p).getFileName.toString)
         == Seq("documents"), s"post-drop vacuum missed the unpinned gen: $reclaimed2")
       intercept[IllegalArgumentException](MergeOps.readSnapshot(spark, sf, k1))
@@ -977,7 +982,8 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(dataFiles(genDir(1)).size > 8,
         "SQL MERGE folded the z-split away (reclusterTouched lost)")
       // v2: rename a SPEC column — metadata only
-      MergeOps.renameColumn(spark, corpus, "documents", "n_chars", "len")
+      GenerationChain.renameColumn(spark,
+        Chain(corpus, "documents", partitioned = false), "n_chars", "len")
       expected = expected.withColumnRenamed("n_chars", "len")
       assert(rows(served()) == rows(expected), "v2 rename diverged")
       // v3: MOR apply speaking the NEW logical name
@@ -1041,7 +1047,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         "VERSION AS OF 3 diverged from the MOR generation's view")
       // maintenance end state: fold + vacuum leave one clean generation
       MergeOps.compactGenerations(spark, corpus, "documents")
-      MergeOps.vacuum(spark, corpus, "documents", keepLast = 1)
+      GenerationChain.vacuum(spark, Chain(corpus, "documents", partitioned = false), keepLast = 1)
       assert(MergeOps.generations(spark, corpus, "documents").size == 1,
         "vacuum left a chain")
       assert(rows(served()) == rows(expected), "fold+vacuum changed the corpus")
@@ -1083,7 +1089,8 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       CorpusLayout.materialize(spark, corpus, tables = Seq("documents"))
       // v1: RENAME lang → language. Metadata only: every data file of
       // the new generation is the parent's inode; only _MAPPING differs.
-      MergeOps.renameColumn(spark, corpus, "documents", "lang", "language")
+      GenerationChain.renameColumn(spark,
+        Chain(corpus, "documents", partitioned = false), "lang", "language")
       var expected = base.withColumnRenamed("lang", "language")
       assert(served().columns.toSeq ==
         Seq("doc_id", "text", "language", "source", "n_chars"),
@@ -1121,7 +1128,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(rows(served()) == rows(expected), "post-rename MOR apply diverged")
       assert(graft.sources.CorpusLayout.hasDv(genDir(3)), "MOR gen lost its sidecar")
       // v4: DROP source — metadata only, column hidden, values intact
-      MergeOps.dropColumn(spark, corpus, "documents", "source")
+      GenerationChain.dropColumn(spark, Chain(corpus, "documents", partitioned = false), "source")
       expected = expected.drop("source")
       assert(!served().columns.contains("source"), "drop did not hide the column")
       assert(rows(served()) == rows(expected), "drop changed surviving values")
@@ -1142,18 +1149,22 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         s"rebase wrote wrong physical names: ${physical.columns.mkString(",")}")
       assert(rows(served()) == rows(expected), "rebase changed the corpus")
       // rename round-trip restores the original name
-      MergeOps.renameColumn(spark, corpus, "documents", "language", "lang")
+      GenerationChain.renameColumn(spark,
+        Chain(corpus, "documents", partitioned = false), "language", "lang")
       expected = expected.withColumnRenamed("language", "lang")
       assert(rows(served()) == rows(expected), "round-trip rename diverged")
       // malformed evolution fails loudly
       intercept[IllegalArgumentException](
-        MergeOps.renameColumn(spark, corpus, "documents", "doc_id", "id"))
+        GenerationChain.renameColumn(spark,
+          Chain(corpus, "documents", partitioned = false), "doc_id", "id"))
       intercept[IllegalArgumentException](
-        MergeOps.dropColumn(spark, corpus, "documents", "doc_id"))
+        GenerationChain.dropColumn(spark,
+          Chain(corpus, "documents", partitioned = false), "doc_id"))
       intercept[IllegalArgumentException](
-        MergeOps.renameColumn(spark, corpus, "documents", "text", "lang"))
+        GenerationChain.renameColumn(spark,
+          Chain(corpus, "documents", partitioned = false), "text", "lang"))
       intercept[IllegalArgumentException](
-        MergeOps.dropColumn(spark, corpus, "documents", "nope"))
+        GenerationChain.dropColumn(spark, Chain(corpus, "documents", partitioned = false), "nope"))
     } finally {
       CorpusLayout.drop(spark, corpus)
       spark.conf.unset(CorpusLayout.ConfKey)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.MergeOps
-import graft.sources.{CorpusLayout, PartitionedLayout}
+import graft.sources.{CorpusLayout, GenerationChain, PartitionedLayout}
+import graft.sources.GenerationChain.Chain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -851,7 +852,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         "SHOW TAGS diverged")
       // the tag namespace is the partitioned chain's own: the FLAT
       // chain of the same corpus has no such tag
-      assert(MergeOps.tags(spark, corpus, "documents").isEmpty,
+      assert(GenerationChain.tags(spark, Chain(corpus, "documents", partitioned = false)).isEmpty,
         "partitioned tag leaked into the flat namespace")
 
       // VERSION AS OF 'birth' reads the tagged generation
@@ -920,12 +921,13 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         spark.conf.unset(MergeOps.ChangeFeedKey)
         spark.sql(s"UPDATE $t SET lang = 'off' WHERE doc_id = ${maxId + 1}")
         val gap = intercept[IllegalStateException] {
-          PartitionedLayout.changeFeed(spark, corpus, "documents", 0).count()
+          GenerationChain.changeFeed(spark,
+            Chain(corpus, "documents", partitioned = true), 0).count()
         }
         assert(gap.getMessage.contains("no change-feed sidecar"),
           s"gapped feed must fail loudly, got: ${gap.getMessage}")
         // a range that stops before the gap still serves
-        assert(PartitionedLayout.changeFeed(spark, corpus, "documents",
+        assert(GenerationChain.changeFeed(spark, Chain(corpus, "documents", partitioned = true),
           0, 4).count() == n9 + n10 + 1)
       } finally spark.conf.unset(MergeOps.ChangeFeedKey)
     }
@@ -981,6 +983,58 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         spark.sql(s"ALTER TABLE $t ADD COLUMNS (lang STRING)") }
       assert(shadow.getMessage.contains("already exists"),
         s"shadowing a dropped slot must refuse, got: ${shadow.getMessage}")
+    }
+  }
+
+  test("DESCRIBE HISTORY counts base data files only: MOR sidecars and feed slices excluded") {
+    import spark.implicits._
+    withSandbox { (corpus, t, base) =>
+      val k = base.orderBy($"doc_id").limit(1).head().getLong(0)
+      spark.conf.set(MergeOps.ChangeFeedKey, "true")
+      spark.conf.set(MergeOps.MergeModeKey, "mor")
+      try spark.sql(s"UPDATE $t SET lang = 'h1' WHERE doc_id = $k")
+      finally {
+        spark.conf.unset(MergeOps.MergeModeKey)
+        spark.conf.unset(MergeOps.ChangeFeedKey)
+      }
+      val tip = PartitionedLayout.generations(spark, corpus, "documents").last._2
+      assert(PartitionedLayout.dvParts(tip).nonEmpty &&
+        new java.io.File(tip, MergeOps.CdfDir).isDirectory,
+        "precondition: the MOR tip carries a _dv sidecar and a _cdf slice")
+      // base parquet files directly under each source=*/ dir — the
+      // _dv/ subdirs and the root _cdf/ are not listed
+      def baseFiles(gen: String): Seq[java.io.File] =
+        new java.io.File(gen).listFiles().toSeq
+          .filter(d => d.isDirectory && d.getName.startsWith("source="))
+          .flatMap(_.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet")))
+      val hist = spark.sql(s"DESCRIBE HISTORY $t").collect()
+      assert(hist.length == 2, s"expected 2 generations, got ${hist.length}")
+      hist.foreach { r =>
+        val files = baseFiles(r.getAs[String]("path"))
+        assert(r.getAs[Int]("files") == files.size &&
+          r.getAs[Long]("bytes") == files.map(_.length).sum,
+          s"generation ${r.getInt(0)}: history says ${r.getAs[Int]("files")} files / " +
+            s"${r.getAs[Long]("bytes")} B, base data is ${files.size} / " +
+            s"${files.map(_.length).sum} B")
+      }
+    }
+  }
+
+  test("an incomplete generation dir does not make VACUUM re-create the served table") {
+    withSandbox { (corpus, t, base) =>
+      def createTime: Long = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t)).createTime
+      val before = createTime
+      // a crashed writer's leftover: a _v1 dir with a partition dir but
+      // no completion markers
+      val gen0 = PartitionedLayout.generations(spark, corpus, "documents").last._2
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(gen0).resolveSibling("documents_v1").resolve("source=x"))
+      Thread.sleep(20) // a re-created table would carry a later createTime
+      assert(spark.sql(s"VACUUM $t RETAIN 2 GENERATIONS").count() == 0)
+      assert(createTime == before,
+        "VACUUM dropped and re-created the catalog table over an incomplete generation")
+      assert(spark.table(t).count() == base.count(), "the served table changed")
     }
   }
 

@@ -386,7 +386,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
       assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "comp_table")) &&
         java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "comp_table_v1")))
       // an idempotent replay makes v1 prunable; prune keeps the served
-      // v2 readable (linked bytes survive — the MergeOps.vacuum argument)
+      // v2 readable (linked bytes survive — the GenerationChain.vacuum argument)
       assert(SignatureStore.applyChangeset(spark, c1, changes))
       assert(canon(spark.table(compT)) == repaired, "replayed apply diverged")
       val pruned = SignatureStore.pruneOldGenerations(spark, c1)

@@ -2,6 +2,8 @@ package graft
 
 import graft.operators.MergeOps
 import graft.sources.CorpusLayout
+import graft.sources.GenerationChain
+import graft.sources.GenerationChain.Chain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -314,7 +316,8 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         // replay law: folding the feed onto generation 0 reproduces the tip
         val v0 = MergeOps.readGeneration(spark, corpus, "documents", 0)
         val replayed = (1 to 3).foldLeft(v0) { (acc, g) =>
-          val cs = MergeOps.changeFeed(spark, corpus, "documents", g - 1, g)
+          val cs = GenerationChain.changeFeed(spark,
+            Chain(corpus, "documents", partitioned = false), g - 1, g)
             .withColumn(MergeOps.TombstoneCol, $"_change_type" === "delete")
             .drop("_change_type", "_commit_generation")
           MergeOps.applyChanges(acc, cs)
@@ -343,7 +346,8 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         MergeOps.generations(spark, corpus, "documents").last._2, "_cdf")),
         "feed sidecar written although the conf is off")
       val e = intercept[IllegalStateException](
-        MergeOps.changeFeed(spark, corpus, "documents", 0, 1).count())
+        GenerationChain.changeFeed(spark,
+          Chain(corpus, "documents", partitioned = false), 0, 1).count())
       assert(e.getMessage.contains(MergeOps.ChangeFeedKey),
         s"gapped-feed error unhelpful: ${e.getMessage}")
     }
@@ -385,7 +389,8 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         // consumers' rule — a pre-image is information, not an edit)
         val v0 = MergeOps.readGeneration(spark, corpus, "documents", 0)
         val replayed = (1 to 2).foldLeft(v0) { (acc, g) =>
-          val cs = MergeOps.changeFeed(spark, corpus, "documents", g - 1, g)
+          val cs = GenerationChain.changeFeed(spark,
+            Chain(corpus, "documents", partitioned = false), g - 1, g)
             .filter($"_change_type" =!= "update_preimage")
             .withColumn(MergeOps.TombstoneCol, $"_change_type" === "delete")
             .drop("_change_type", "_commit_generation")

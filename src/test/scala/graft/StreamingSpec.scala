@@ -1016,7 +1016,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
           .select($"doc_id", $"text", $"_change_type", $"_commit_generation")
           .orderBy($"_commit_generation", $"doc_id", $"_change_type")
           .collect().map(_.toString).toSeq
-        val batch = MergeOps.changeFeed(spark, corpus, "documents", 0)
+        val batch = graft.sources.GenerationChain.changeFeed(spark,
+          graft.sources.GenerationChain.Chain(corpus, "documents", partitioned = false), 0)
           .select($"doc_id", $"text", $"_change_type", $"_commit_generation")
           .orderBy($"_commit_generation", $"doc_id", $"_change_type")
           .collect().map(_.toString).toSeq
